@@ -2,14 +2,18 @@
 path of :class:`FPGrowth`).
 
 Re-expresses the reference's PFP/EPFP pipeline (``epfp/FPGrowthCore.scala:
-49-114``) Spark-first:
+49-114``) Spark-first, written once and keyed by a corpus column so that
+several independent corpora mine in one pass (:func:`mine_pandas_by`);
+ungrouped mining (:func:`mine_pandas`) is the case of one constant key.
 
-stage 1  frequent items      — explode → hash-agg → HAVING (Catalyst does
+stage 1  frequent items      — explode → hash-agg → HAVING against each
+                               corpus's threshold (Catalyst does
                                partial+final, i.e. the reference's
                                map-side-combined ``reduceByKey``); the
-                               surviving item list is bounded by
-                               minSupport and collected to build the rank
-                               dictionary (the reference does the same,
+                               surviving (corpus, item) rows are bounded
+                               by minSupport and collected to build the
+                               rank dictionaries on the driver (the
+                               reference does the same,
                                FPGrowthCore.scala:86).
 stage 2  conditional DB      — per basket, items → ranks (dictionary
                                encoding, O2) and AT MOST ONE longest
@@ -17,16 +21,16 @@ stage 2  conditional DB      — per basket, items → ranks (dictionary
                                optimization O3, FPGrowthCore.scala:
                                123-142), via an Arrow-batched
                                ``mapInPandas``.
-stage 3  combine             — ``groupBy(group, ranks).count()``:
+stage 3  combine             — ``groupBy(corpus, group, ranks).count()``:
                                identical conditional transactions merge
                                map-side BEFORE the shuffle — recovering
                                the reference's ``aggregateByKey`` tree
                                combine (O4) declaratively.
-stage 4  group mining        — ``groupBy(group).applyInPandas``: build an
-                               FP-tree per group, extract patterns whose
-                               suffix item the group owns (duplicate
-                               suppression O5, FPTree.scala:85-97),
-                               decode ranks → items.
+stage 4  group mining        — ``groupBy(corpus, group).applyInPandas``:
+                               build an FP-tree per group, extract
+                               patterns whose suffix item the group owns
+                               (duplicate suppression O5,
+                               FPTree.scala:85-97), decode ranks → items.
 
 Group assignment uses the EPFP balanced partitioner (O6) by default,
 PFP's hash assignment otherwise — see operators/balanced.py.
@@ -38,10 +42,11 @@ remains the default for the largest inputs (SURVEY §7.4).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from optimal_parallel_fp_growth_spark.operators.balanced import (
@@ -115,119 +120,12 @@ def mine_pandas(
     num_partitions: int | None = None,
     balanced: bool = True,
 ) -> DataFrame:
-    """items_df: single ``items`` array column (string/int/long elements),
-    nulls dropped. → (items: array<input element type>, freq: long),
-    uncanonicalized order."""
-    spark = items_df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    # Item type is generic like the reference's `Item: ClassTag`
-    # (epfp/FPGrowthCore.scala:49) — inherit it from the input schema.
-    item_dt = items_df.schema["items"].dataType.elementType.simpleString()
-    out_schema = f"items array<{item_dt}>, freq long"
-
-    # stage 1 — frequent items, rank dictionary (freq desc, item asc)
-    freq_rows = (
-        items_df.select(F.explode("items").alias("item"))
-        .groupBy("item")
-        .agg(F.count("*").alias("freq"))
-        .where(F.col("freq") >= min_count)
-        .orderBy(F.desc("freq"), F.asc("item"))
-        .collect()
-    )
-    if not freq_rows:
-        return spark.createDataFrame([], out_schema)
-    rank_to_item = [r["item"] for r in freq_rows]
-    num_groups = max(1, min(num_partitions, len(rank_to_item)))
-    assign = (
-        balanced_group_assignment(len(rank_to_item), num_groups)
-        if balanced
-        else hash_group_assignment(len(rank_to_item), num_groups)
-    )
-
-    sc = spark.sparkContext
-    bc_item_to_rank = sc.broadcast({it: r for r, it in enumerate(rank_to_item)})
-    bc_assign = sc.broadcast(assign)
-    bc_rank_to_item = sc.broadcast(rank_to_item)
-
-    # stage 2 — dictionary-encode baskets; ≤1 longest prefix per group
-    def gen_cond(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        item_to_rank = bc_item_to_rank.value
-        group_of = bc_assign.value
-        for pdf in batches:
-            out_group: list[int] = []
-            out_ranks: list[list[int]] = []
-            for items in pdf["items"]:
-                ranks = sorted(
-                    {item_to_rank[i] for i in items if i in item_to_rank}
-                )
-                emitted: set[int] = set()
-                for idx in range(len(ranks) - 1, -1, -1):
-                    g = group_of[ranks[idx]]
-                    if g not in emitted:
-                        emitted.add(g)
-                        out_group.append(g)
-                        out_ranks.append(ranks[: idx + 1])
-            # Explicit dtypes: an empty batch would otherwise default to
-            # float64 columns, which Arrow cannot convert to int/array.
-            yield pd.DataFrame(
-                {
-                    "group": pd.Series(out_group, dtype="int32"),
-                    "ranks": pd.Series(out_ranks, dtype="object"),
-                }
-            )
-
-    cond = items_df.mapInPandas(gen_cond, "group int, ranks array<int>")
-
-    # stage 3 — merge identical conditional transactions (partial agg
-    # happens map-side, so the shuffle carries combined rows)
-    cond_agg = cond.groupBy("group", "ranks").agg(F.count("*").alias("cnt"))
-
-    # One group's conditional DB must fit a Python worker's heap; fail
-    # loudly with actionable advice instead of OOMing the executor.
-    max_group_rows = 5_000_000
-
-    # stage 4 — per-group tree build + extraction + rank decode
-    def mine_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_group_rows:
-            raise RuntimeError(
-                f"mining group {int(pdf['group'].iloc[0])} has {len(pdf)} "
-                f"distinct conditional transactions (> {max_group_rows}); "
-                "raise num_partitions (more, smaller groups), raise "
-                "min_support, or use kernel='mllib' for this scale"
-            )
-        group = int(pdf["group"].iloc[0])
-        group_of = bc_assign.value
-        decode = bc_rank_to_item.value
-        _, header = _build_tree(
-            (tuple(ranks), int(cnt))
-            for ranks, cnt in zip(pdf["ranks"], pdf["cnt"])
-        )
-        patterns: list[tuple[tuple[int, ...], int]] = []
-        _mine_tree(header, (), min_count, lambda r: group_of[r] == group, patterns)
-        return pd.DataFrame(
-            {
-                "items": pd.Series(
-                    [[decode[r] for r in pat] for pat, _ in patterns], dtype="object"
-                ),
-                "freq": pd.Series([supp for _, supp in patterns], dtype="int64"),
-            }
-        )
-
-    # Pin the mining stage's parallelism. Its shuffle is bytes-tiny
-    # (combined conditional transactions), so AQE's bytes-advisory
-    # coalescing packs the COMPUTE-bound Python tree mining into a
-    # handful of tasks (measured r17: 3 tasks for a 40-group run).
-    # An explicit hash repartition on the group key is exempt from AQE
-    # coalescing and satisfies the groupBy's clustering, so no second
-    # exchange is added; 4× overallocation keeps expected hash-collision
-    # parallelism loss under ~12% (guide §2.5: few distinct keys need
-    # several× more partitions than keys to spread).
-    return (
-        cond_agg.repartition(4 * num_groups, "group")
-        .groupBy("group")
-        .applyInPandas(mine_group, out_schema)
-    )
+    """items_df: ``items`` array column (string/int/long elements); null
+    baskets are dropped. → (items: array<input element type>, freq: long),
+    uncanonicalized order. One corpus under a constant key."""
+    return _mine_by_corpus(
+        _keyed(items_df, F.lit(0)), {0: min_count}, num_partitions, balanced
+    ).drop("corpus")
 
 
 def mine_pandas_by(
@@ -237,50 +135,67 @@ def mine_pandas_by(
     num_partitions: int | None = None,
     balanced: bool = True,
 ) -> DataFrame:
-    """Grouped mining: run the full PFP pipeline INDEPENDENTLY per corpus
-    (e.g. per language) in one pass — the "hypertable rollup" shape for
-    mining. items_df: (corpus_col, items array); → (corpus_col, items,
-    freq) where freq ≥ ceil(min_support · |corpus|) within each corpus.
-
-    Same four stages as :func:`mine_pandas`, with the corpus key carried
-    through: per-corpus rank dictionaries and balanced group assignments
-    (stage 1 collects only FREQUENT (corpus, item) rows — bounded by
-    min_support exactly like the reference's dictionary collect), stage
-    2 emits (corpus, group, ranks), stages 3-4 key every shuffle by
-    (corpus, group) so corpora mine in parallel without seeing each
-    other's data. State per applyInPandas call is one corpus-group's
-    conditional DB — the same worker-heap bound as ungrouped mining.
-    """
-    import math
-
-    spark = items_df.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+    """Grouped mining: run the PFP pipeline INDEPENDENTLY per corpus (e.g.
+    per language) in one pass — the "hypertable rollup" shape for mining.
+    items_df: (corpus_col, items array); → (corpus_col, items, freq) where
+    freq ≥ ceil(min_support · |corpus|) within each corpus. Rows with a
+    null basket or a null corpus key are dropped before corpus sizes are
+    counted, as ``FPGrowth.fit`` excludes null baskets from N."""
     if not 0.0 < min_support <= 1.0:
         raise ValueError(f"min_support must be in (0, 1], got {min_support}")
-    item_dt = items_df.schema["items"].dataType.elementType.simpleString()
-    corpus_dt = items_df.schema[corpus_col].dataType.simpleString()
-    out_schema = f"{corpus_col} {corpus_dt}, items array<{item_dt}>, freq long"
+    src = _keyed(items_df, F.col(corpus_col))
+    min_count = {
+        r["corpus"]: max(1, math.ceil(min_support * r["n"]))
+        for r in src.groupBy("corpus").agg(F.count("*").alias("n")).collect()
+    }
+    return _mine_by_corpus(
+        src, min_count, num_partitions, balanced
+    ).withColumnRenamed("corpus", corpus_col)
 
-    src = items_df.select(F.col(corpus_col).alias("corpus"), "items")
-    sizes = {r["corpus"]: r["n"] for r in
-             src.groupBy("corpus").agg(F.count("*").alias("n")).collect()}
-    if not sizes:
-        return spark.createDataFrame([], out_schema)
-    min_count = {c: max(1, math.ceil(min_support * n)) for c, n in sizes.items()}
-    mc_df = spark.createDataFrame(
-        [(c, m) for c, m in sorted(min_count.items())],
-        f"corpus {corpus_dt}, mc long",
+
+def _keyed(items_df: DataFrame, corpus: Column) -> DataFrame:
+    """(corpus, items) rows without null baskets or null corpus keys."""
+    return items_df.select(corpus.alias("corpus"), "items").where(
+        F.col("corpus").isNotNull() & F.col("items").isNotNull()
     )
 
-    # stage 1 — per-corpus frequent items; only frequent rows are collected
+
+def _mine_by_corpus(
+    src: DataFrame,
+    min_count: dict,
+    num_partitions: int | None,
+    balanced: bool,
+) -> DataFrame:
+    """The four PFP stages over (corpus, items), each corpus with its own
+    threshold ``min_count[corpus]``, rank dictionary and group assignment.
+    → (corpus, items, freq). State per applyInPandas call is one
+    (corpus, group)'s conditional DB."""
+    spark = src.sparkSession
+    if num_partitions is None:
+        num_partitions = spark.sparkContext.defaultParallelism
+    # Item type is generic like the reference's `Item: ClassTag`
+    # (epfp/FPGrowthCore.scala:49) — inherit it from the input schema.
+    item_dt = src.schema["items"].dataType.elementType.simpleString()
+    corpus_dt = src.schema["corpus"].dataType.simpleString()
+    out_schema = f"corpus {corpus_dt}, items array<{item_dt}>, freq long"
+    if not min_count:
+        return spark.createDataFrame([], out_schema)
+
+    # stage 1 — per-corpus frequent items; only frequent rows are
+    # collected. The thresholds ride in a literal map: a DataFrame of them
+    # would be a LogicalRDD whose broadcast costs a Python job per fit.
+    thresholds = F.create_map(
+        *[
+            lit
+            for c, m in min_count.items()
+            for lit in (F.lit(c).cast(corpus_dt), F.lit(m).cast("long"))
+        ]
+    )
     freq_rows = (
         src.select("corpus", F.explode("items").alias("item"))
         .groupBy("corpus", "item")
         .agg(F.count("*").alias("freq"))
-        .join(F.broadcast(mc_df), "corpus")
-        .where(F.col("freq") >= F.col("mc"))
-        .select("corpus", "item", "freq")
+        .where(F.col("freq") >= thresholds[F.col("corpus")])
         .collect()
     )
     if not freq_rows:
@@ -288,23 +203,26 @@ def mine_pandas_by(
     per_corpus: dict = {}
     for r in freq_rows:
         per_corpus.setdefault(r["corpus"], []).append((r["item"], r["freq"]))
-    rank_to_item: dict = {}
     item_to_rank: dict = {}
+    rank_to_item: dict = {}
     assign: dict = {}
+    num_groups = 0
     for c, pairs in per_corpus.items():
-        pairs.sort(key=lambda p: (-p[1], p[0]))
+        # rank dictionary: freq desc, item asc (a null item first, as
+        # Spark orders nulls)
+        pairs.sort(key=lambda p: (-p[1], p[0] is not None, p[0]))
         decode = [it for it, _ in pairs]
         rank_to_item[c] = decode
         item_to_rank[c] = {it: r for r, it in enumerate(decode)}
         g = max(1, min(num_partitions, len(decode)))
+        num_groups += g
         assign[c] = (
             balanced_group_assignment(len(decode), g)
             if balanced
             else hash_group_assignment(len(decode), g)
         )
 
-    sc = spark.sparkContext
-    bc = sc.broadcast((item_to_rank, rank_to_item, assign, min_count))
+    bc = spark.sparkContext.broadcast((item_to_rank, rank_to_item, assign, min_count))
 
     # stage 2 — dictionary-encode per corpus; ≤1 longest prefix per group
     def gen_cond(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -327,6 +245,8 @@ def mine_pandas_by(
                         out_c.append(corpus)
                         out_group.append(g)
                         out_ranks.append(ranks[: idx + 1])
+            # Explicit dtypes: an empty batch would otherwise default to
+            # float64 columns, which Arrow cannot convert to int/array.
             yield pd.DataFrame(
                 {
                     "corpus": pd.Series(out_c, dtype="object"),
@@ -339,53 +259,57 @@ def mine_pandas_by(
         gen_cond, f"corpus {corpus_dt}, group int, ranks array<int>"
     )
 
-    # stage 3 — map-side combine of identical conditional transactions
+    # stage 3 — merge identical conditional transactions (partial agg
+    # happens map-side, so the shuffle carries combined rows)
     cond_agg = cond.groupBy("corpus", "group", "ranks").agg(
         F.count("*").alias("cnt")
     )
 
+    # One group's conditional DB must fit a Python worker's heap; fail
+    # loudly with actionable advice instead of OOMing the executor.
     max_group_rows = 5_000_000
 
-    # stage 4 — per-(corpus, group) tree build + extraction + decode
+    # stage 4 — per-(corpus, group) tree build + extraction + rank decode
     def mine_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_group_rows:
-            raise RuntimeError(
-                f"mining group {pdf['corpus'].iloc[0]}/{int(pdf['group'].iloc[0])} "
-                f"has {len(pdf)} distinct conditional transactions "
-                f"(> {max_group_rows}); raise num_partitions or min_support"
-            )
-        _, r2i, asg, mcs = bc.value
         corpus = pdf["corpus"].iloc[0]
         group = int(pdf["group"].iloc[0])
+        if len(pdf) > max_group_rows:
+            raise RuntimeError(
+                f"mining group {group} of corpus {corpus} has {len(pdf)} "
+                f"distinct conditional transactions (> {max_group_rows}); "
+                "raise num_partitions (more, smaller groups), raise "
+                "min_support, or use kernel='mllib' for this scale"
+            )
+        _, r2i, asg, mcs = bc.value
         group_of = asg[corpus]
         decode = r2i[corpus]
-        mc = mcs[corpus]
         _, header = _build_tree(
             (tuple(ranks), int(cnt))
             for ranks, cnt in zip(pdf["ranks"], pdf["cnt"])
         )
         patterns: list[tuple[tuple[int, ...], int]] = []
-        _mine_tree(header, (), mc, lambda r: group_of[r] == group, patterns)
+        _mine_tree(header, (), mcs[corpus], lambda r: group_of[r] == group, patterns)
         return pd.DataFrame(
             {
                 "corpus": pd.Series([corpus] * len(patterns), dtype="object"),
                 "items": pd.Series(
-                    [[decode[r] for r in pat] for pat, _ in patterns],
-                    dtype="object",
+                    [[decode[r] for r in pat] for pat, _ in patterns], dtype="object"
                 ),
-                "freq": pd.Series(
-                    [supp for _, supp in patterns], dtype="int64"
-                ),
+                "freq": pd.Series([supp for _, supp in patterns], dtype="int64"),
             }
         )
 
-    # Same mining-stage parallelism pin as mine_pandas: the (corpus,
-    # group) shuffle is bytes-tiny and AQE would coalesce the
-    # compute-bound mining into a few tasks.
-    total_groups = sum(max(a) + 1 for a in assign.values())
+    # Pin the mining stage's parallelism. Its shuffle is bytes-tiny
+    # (combined conditional transactions), so AQE's bytes-advisory
+    # coalescing packs the COMPUTE-bound Python tree mining into a
+    # handful of tasks (measured r17: 3 tasks for a 40-group run).
+    # An explicit hash repartition on the group key is exempt from AQE
+    # coalescing and satisfies the groupBy's clustering, so no second
+    # exchange is added; 4× overallocation keeps expected hash-collision
+    # parallelism loss under ~12% (guide §2.5: few distinct keys need
+    # several× more partitions than keys to spread).
     return (
-        cond_agg.repartition(4 * total_groups, "corpus", "group")
+        cond_agg.repartition(4 * num_groups, "corpus", "group")
         .groupBy("corpus", "group")
-        .applyInPandas(mine_group, f"corpus {corpus_dt}, items array<{item_dt}>, freq long")
-        .withColumnRenamed("corpus", corpus_col)
+        .applyInPandas(mine_group, out_schema)
     )

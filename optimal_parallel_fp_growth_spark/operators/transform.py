@@ -32,7 +32,6 @@ def transform_with_rules(
     items_col: str = "items",
     prediction_col: str = "prediction",
     keep_array: bool = True,
-    dedupe_baskets: bool = True,
 ) -> DataFrame:
     """Append ``prediction_col`` (string) and optionally
     ``{prediction_col}_items`` (array) to ``dataset``.
@@ -42,25 +41,15 @@ def transform_with_rules(
     rule predict [] / "" (the reference's empty-string quirk,
     pfp/PFP.scala:48).
 
-    Physical shape (``dedupe_baskets=True``): the prediction is a pure
-    function of the basket, so we evaluate the (broadcast) rule
-    nested-loop join once per DISTINCT basket and equi-join the results
-    back on the array key — smaller NLJ input than per-row, and
-    multiplicity/extra columns of ``dataset`` are preserved by the
-    join-back. Right when baskets repeat a lot (events user-days).
-
-    ``dedupe_baskets=False`` skips the distinct and the join-back:
-    one scan, zero extra shuffles, NLJ cost per ROW. Right when baskets
-    are mostly unique (order baskets) — measured ~2× faster there; same
-    results either way (tested).
+    Physical shape: the prediction is a pure function of the basket, so
+    we evaluate the (broadcast) rule nested-loop join once per DISTINCT
+    basket and equi-join the results back on the array key — smaller NLJ
+    input than per-row, and multiplicity/extra columns of ``dataset`` are
+    preserved by the join-back.
     """
     for c in (prediction_col, f"{prediction_col}_items"):
         if c in dataset.columns:
             raise ValueError(f"output column {c!r} already exists in dataset")
-    if not dedupe_baskets:
-        return _transform_direct(
-            dataset, rules, items_col, prediction_col, keep_array
-        )
 
     baskets = (
         dataset.select(F.col(items_col).alias("__basket"))
@@ -94,9 +83,8 @@ def transform_with_rules(
                     F.array_sort(
                         F.collect_list(
                             F.struct(
-                                # Null lift → -inf priority (sorts last),
-                                # matching _transform_direct and the UDF
-                                # twin; without the coalesce a null
+                                # Null lift → -inf priority (sorts
+                                # last); without the coalesce a null
                                 # neg_lift would sort FIRST here.
                                 (-F.coalesce(
                                     F.col("lift"),
@@ -132,105 +120,3 @@ def transform_with_rules(
         out = out.drop("__pred_items")
     return out
 
-
-def _transform_direct(
-    dataset: DataFrame,
-    rules: DataFrame,
-    items_col: str,
-    prediction_col: str,
-    keep_array: bool,
-) -> DataFrame:
-    """One-scan variant: rules collected (bounded — the reference
-    collects them too), embedded as a lift-desc-sorted array-of-structs
-    literal, applied per row with filter/transform HOFs. No distinct, no
-    join-back, no shuffle."""
-    collected = [
-        (list(r.antecedent), r.consequent[0], float("-inf") if r.lift is None else r.lift)
-        for r in rules.select("antecedent", "consequent", "lift").collect()
-    ]
-    collected.sort(key=lambda t: (-t[2], t[1]))
-
-    items = F.col(items_col)
-    if collected:
-        # one array Literal per antecedent (F.lit(list)), not one
-        # element Literal per item: with thousands of rules the
-        # element-wise tree dominates plan analysis time
-        rule_lits = F.array(
-            *[
-                F.struct(
-                    F.lit(list(ante)).alias("ante"),
-                    F.lit(cons).alias("cons"),
-                )
-                for ante, cons, _ in collected
-            ]
-        )
-        applicable = F.filter(
-            rule_lits,
-            lambda r: (F.size(F.array_except(r["ante"], items)) == 0)
-            & ~F.array_contains(items, r["cons"]),
-        )
-        pred_items = F.array_distinct(F.transform(applicable, lambda r: r["cons"]))
-    else:
-        pred_items = F.array().cast("array<string>")
-
-    out = dataset.withColumn(
-        "__pred_items",
-        F.when(items.isNull(), F.lit(None).cast("array<string>")).otherwise(
-            pred_items
-        ),
-    ).withColumn(
-        prediction_col,
-        F.when(items.isNull(), F.lit(None).cast("string")).otherwise(
-            F.array_join(F.col("__pred_items"), ", ")
-        ),
-    )
-    if keep_array:
-        return out.withColumnRenamed("__pred_items", f"{prediction_col}_items")
-    return out.drop("__pred_items")
-
-
-def transform_with_rules_udf(
-    dataset: DataFrame,
-    rules: DataFrame,
-    items_col: str = "items",
-    prediction_col: str = "prediction",
-) -> DataFrame:
-    """SURVEY §2.4 Option A — the reference's LITERAL physical shape
-    (``epfp/FPGrowth.scala:124-148``): collect the rules to the driver,
-    ``sc.broadcast`` them, apply per row in a (vectorized) UDF. Kept as
-    the measured alternative to the declarative path above and as parity
-    evidence; same total order (lift desc, consequent asc), same
-    null/empty semantics. Prefer ``transform_with_rules`` in pipelines —
-    it stays JVM-side and dedupes work per distinct basket."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    collected = [
-        (tuple(r.antecedent), r.consequent[0], float("-inf") if r.lift is None else r.lift)
-        for r in rules.select("antecedent", "consequent", "lift").collect()
-    ]
-    collected.sort(key=lambda t: (-t[2], t[1]))
-    bc = dataset.sparkSession.sparkContext.broadcast(collected)
-
-    def predict(items):
-        rs = bc.value
-
-        def one(basket):
-            if basket is None:
-                return None
-            s = set(basket)
-            out, seen = [], set()
-            for ante, cons, _ in rs:
-                if cons not in s and cons not in seen and s.issuperset(ante):
-                    seen.add(cons)
-                    out.append(cons)
-            return ", ".join(out)
-
-        return items.apply(one)
-
-    # `from __future__ import annotations` stringifies hints, which
-    # pandas_udf can't resolve — attach real type objects instead.
-    predict.__annotations__ = {"items": pd.Series, "return": pd.Series}
-    predict = pandas_udf(predict, "string")
-
-    return dataset.withColumn(prediction_col, predict(F.col(items_col)))

@@ -1,5 +1,5 @@
 """Round-2 ADVICE items: model inherits the estimator's min_confidence,
-null-lift ordering parity across transform strategies, reserved-column
+null-lift ordering parity between transform and the spec, reserved-column
 collision guards, explicit cache release, and the reference's
 self-recommendation transform overload (pfp/FPGrowth.scala:124-148)."""
 
@@ -39,12 +39,11 @@ def test_model_inherits_estimator_min_confidence(fpm_train):
 
 
 def test_null_lift_rules_order_identically_across_strategies(spark):
-    """Externally supplied rules with null lift must sort LAST (-inf)
-    in all three tested-equal strategies, not first in the declarative
-    path only."""
+    """Externally supplied rules with null lift must sort LAST (-inf) in
+    transform, exactly as in the pure-Python spec, not first."""
+    from fpm_spec import predict
     from optimal_parallel_fp_growth_spark.operators.transform import (
         transform_with_rules,
-        transform_with_rules_udf,
     )
 
     rules = spark.createDataFrame(
@@ -57,13 +56,8 @@ def test_null_lift_rules_order_identically_across_strategies(spark):
     )
     baskets = spark.createDataFrame([(1, ["a"])], "id long, items array<string>")
     declarative = transform_with_rules(baskets, rules).collect()[0].prediction
-    direct = (
-        transform_with_rules(baskets, rules, dedupe_baskets=False)
-        .collect()[0]
-        .prediction
-    )
-    udf = transform_with_rules_udf(baskets, rules).collect()[0].prediction
-    assert declarative == direct == udf == "x, z, y"
+    spec = predict(rules.collect(), ["a"])
+    assert declarative == spec == "x, z, y"
 
 
 def test_reserved_column_guards_raise(spark):

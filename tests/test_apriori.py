@@ -12,12 +12,16 @@ import math
 from collections import Counter
 from itertools import combinations
 
+import pytest
+
 from optimal_parallel_fp_growth_spark.operators.apriori import (
     apriori_one_to_one_rules,
 )
 from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_events,
 )
+
+pytestmark = pytest.mark.fpm
 
 
 def _brute(baskets, min_support, min_confidence):

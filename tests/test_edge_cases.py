@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 
+pytestmark = pytest.mark.fpm
+
 
 @pytest.mark.parametrize("kernel", ["mllib", "pandas"])
 def test_empty_input(spark, kernel):

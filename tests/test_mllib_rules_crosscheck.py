@@ -6,12 +6,15 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.ml.fpm import FPGrowth as MLlibFPGrowth
 
 from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_events,
 )
+
+pytestmark = pytest.mark.fpm
 
 
 def _ours(model, min_conf):

@@ -17,6 +17,8 @@ from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_lineitem,
 )
 
+pytestmark = pytest.mark.fpm
+
 
 def as_dict(df):
     return {tuple(r["items"]): r["freq"] for r in df.collect()}
@@ -53,15 +55,10 @@ def test_single_group(spark, fpm_train):
 
 @pytest.mark.parametrize("balanced", [True, False])
 def test_grouped_mining_matches_per_corpus_runs(spark, sf_small, balanced):
-    """mine_pandas_by(corpus_col) must equal running the ungrouped kernel
-    once per corpus at that corpus's own ceil(minSupport·n) threshold —
-    per-corpus dictionaries and thresholds, no cross-corpus leakage."""
-    import math
-
-    from optimal_parallel_fp_growth_spark.operators.pfp_kernel import (
-        mine_pandas,
-        mine_pandas_by,
-    )
+    """mine_pandas_by(corpus_col) must equal MLlib run once per corpus at
+    that corpus's own ceil(minSupport·n) threshold — per-corpus
+    dictionaries and thresholds, no cross-corpus leakage."""
+    from optimal_parallel_fp_growth_spark.operators.pfp_kernel import mine_pandas_by
     from optimal_parallel_fp_growth_spark.plans.transactions import (
         transactions_from_documents_by_lang,
     )
@@ -79,9 +76,10 @@ def test_grouped_mining_matches_per_corpus_runs(spark, sf_small, balanced):
     for lang_row in tx.select("lang").distinct().collect():
         lang = lang_row["lang"]
         sub = tx.where(F.col("lang") == lang).select("items")
-        mc = max(1, math.ceil(ms * sub.count()))
-        for r in mine_pandas(sub, mc, num_partitions=4).collect():
-            want[(lang, tuple(sorted(r["items"])))] = r["freq"]
+        # MLlib's own threshold is ceil(minSupport · |sub|)
+        model = FPGrowth(min_support=ms, kernel="mllib").fit(sub)
+        for r in model.freq_itemsets.collect():
+            want[(lang, tuple(r["items"]))] = r["freq"]
 
     assert got == want
     assert len({lang for lang, _ in got}) > 1  # exercised multiple corpora
@@ -96,6 +94,37 @@ def test_grouped_mining_empty_and_unknown_corpus(spark):
     rows = [("a", ["x"]), ("a", ["y"]), ("a", ["z"])]
     df = spark.createDataFrame(rows, "lang string, items array<string>")
     assert mine_pandas_by(df, "lang", min_support=0.9).count() == 0
+
+    def mined(rows):
+        df = spark.createDataFrame(rows, "lang string, items array<string>")
+        return sorted(
+            (r["lang"], tuple(sorted(r["items"])), r["freq"])
+            for r in mine_pandas_by(df, "lang", min_support=0.5).collect()
+        )
+
+    # a null corpus key next to a non-null one: its rows are dropped
+    assert mined([("a", ["x"]), (None, ["x"]), (None, ["y"])]) == [("a", ("x",), 1)]
+    # a null basket is dropped before the corpus size is counted, so
+    # corpus "a" has n = 2 and min_count = 1
+    assert mined([("a", ["x", "y"]), ("a", None), ("a", ["x"])]) == [
+        ("a", ("x",), 2),
+        ("a", ("x", "y"), 1),
+        ("a", ("y",), 1),
+    ]
+
+
+def test_null_item_is_mined_as_an_item(spark):
+    """A null element inside a basket is an item like any other, even when
+    its frequency ties with a non-null item's in the rank dictionary."""
+    from optimal_parallel_fp_growth_spark.operators.pfp_kernel import mine_pandas
+
+    df = spark.createDataFrame([(["x", None],), (["x"],), ([None],)], "items array<string>")
+    got = {tuple(r["items"]): r["freq"] for r in mine_pandas(df, 1).collect()}
+    assert {tuple(sorted(k, key=str)): v for k, v in got.items()} == {
+        ("x",): 2,
+        (None,): 2,
+        (None, "x"): 1,
+    }
 
 
 def test_balanced_assignment_properties():

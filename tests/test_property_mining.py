@@ -1,14 +1,21 @@
 """Property-based differential test: on random small transaction sets,
-both kernels must equal a brute-force itemset enumeration, and rules
-must satisfy their defining identities."""
+both kernels must equal a brute-force itemset enumeration (the pandas
+kernel under every group assignment and group count), predictions must
+equal the pure-Python spec, and rules must satisfy their defining
+identities."""
 
 from __future__ import annotations
 
 import math
 from itertools import combinations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+
+from fpm_spec import predict
+
+pytestmark = pytest.mark.fpm
 
 ALPHABET = ["a", "b", "c", "d", "e"]
 
@@ -36,18 +43,41 @@ def brute_force(baskets: list[list[str]], min_support: float) -> dict[tuple, int
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(baskets=baskets_strategy, min_support=st.sampled_from([0.2, 0.4, 0.6]))
-def test_both_kernels_match_brute_force(spark, baskets, min_support):
+@given(
+    baskets=baskets_strategy,
+    min_support=st.sampled_from([0.2, 0.4, 0.6]),
+    balanced=st.booleans(),
+    num_partitions=st.sampled_from([1, 2, 7, 64]),
+)
+def test_both_kernels_match_brute_force(spark, baskets, min_support, balanced, num_partitions):
     from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 
     tx = spark.createDataFrame([(b,) for b in baskets], "items array<string>")
     want = brute_force(baskets, min_support)
+    probes = spark.createDataFrame(
+        list(enumerate([*baskets, None])), "id long, items array<string>"
+    )
     for kernel in ("mllib", "pandas"):
-        model = FPGrowth(min_support=min_support, kernel=kernel).fit(tx)
+        model = FPGrowth(
+            min_support=min_support,
+            min_confidence=0.0,
+            kernel=kernel,
+            balanced=balanced,
+            num_partitions=num_partitions,
+        ).fit(tx)
         got = {
             tuple(r["items"]): r["freq"] for r in model.freq_itemsets.collect()
         }
-        assert got == want, f"kernel={kernel} baskets={baskets} s={min_support}"
+        where = (
+            f"kernel={kernel} balanced={balanced} num_partitions={num_partitions} "
+            f"baskets={baskets} s={min_support}"
+        )
+        assert got == want, where
+        rules = model.association_rules().collect()
+        preds = {r["id"]: r["prediction"] for r in model.transform(probes).collect()}
+        assert preds == {
+            i: predict(rules, b) for i, b in enumerate([*baskets, None])
+        }, where
 
 
 @settings(
