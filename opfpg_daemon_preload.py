@@ -1,12 +1,11 @@
-"""PySpark worker daemon with heavy libraries pre-imported (round 18).
+"""PySpark worker daemon with heavy libraries pre-imported.
 
 PySpark workers fork from a per-executor daemon process
 (``pyspark.daemon``); each fresh worker that touches an Arrow/pandas
 path then pays the pandas+numpy+pyarrow import chain (~1 s) before its
-first batch — measured r17 as the dominant cost of a session's FIRST
-Arrow stage (flagship_setup / multimodal first-stage: ~1 s × 32
-workers of fork-and-import). Importing those libraries IN THE DAEMON,
-before any worker forks, makes every worker inherit the loaded modules
+first batch, the dominant cost of a session's first Arrow stage
+(~1 s per worker of fork-and-import). Importing those libraries IN THE
+DAEMON, before any worker forks, makes every worker inherit the loaded modules
 through fork copy-on-write — the import happens once per executor
 instead of once per worker.
 
@@ -19,11 +18,9 @@ preload.
 This module lives at the REPO ROOT, outside the engine package, on
 purpose: the daemon is launched as ``python -m <module>``, and a
 package-internal module would execute the package ``__init__`` —
-which imports the entire engine (and pyspark.sql) — UNGUARDED before
-the try block below, so any import-time error anywhere in the engine
-would kill the daemon instead of degrading gracefully, and every
-executor daemon would carry the whole engine module tree it never
-uses.
+which imports the engine (and pyspark.sql) — UNGUARDED before the try
+block below, so any import-time error in the engine would kill the
+daemon instead of degrading gracefully.
 
 None of these libraries spawn threads or open descriptors at import
 time (fork-safety): numpy's BLAS pools and pyarrow's memory pools are

@@ -1,211 +1,14 @@
-"""PySpark-native analytics engine with the capabilities of
-Radeity/optimal-parallel-fp-growth (frequent-itemset + association-rule
-mining), rebuilt Spark-first (DataFrame/SQL/Catalyst), plus the
-LLM-data-pipeline operators a 100 TB training-data pipeline needs
-(dedup, similarity search, text analysis, multimodal plumbing).
+"""Frequent-pattern-mining engine on PySpark, with the capabilities of
+Radeity/optimal-parallel-fp-growth: frequent itemsets through FP, PFP and
+EPFP (load-balanced Parallel FP-Growth) or Apriori, association rules
+derived from them, and recommendations served from the rules. Built on
+DataFrames, so Catalyst plans every stage.
 
-Reference parity citations use paths relative to /root/reference/.
+Reference parity citations such as ``epfp/EPFP.scala:26`` are paths in
+the reference repository.
 """
 
-from optimal_parallel_fp_growth_spark.operators.asof import asof_join_last_event
-from optimal_parallel_fp_growth_spark.operators.bloom import (
-    bloom_anti_join,
-    bloom_build,
-    bloom_semi_join,
-)
-from optimal_parallel_fp_growth_spark.operators.sketches import (
-    sketch_distinct,
-    sketch_estimate,
-    sketch_rollup,
-)
-from optimal_parallel_fp_growth_spark.operators.dedup import (
-    decontaminate,
-    dedup_exact,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    ngram_jaccard_prefix,
-    simhash_pairs,
-)
-from optimal_parallel_fp_growth_spark.operators.dedup import (
-    build_minhash_index,
-    connected_components,
-    dedup_against_index,
-    dedup_clusters,
-    deduped_corpus,
-    drop_minhash_index,
-)
-from optimal_parallel_fp_growth_spark.operators.graph import pagerank
-from optimal_parallel_fp_growth_spark.operators.multimodal import (
-    attach_flac_media,
-    attach_gif_media,
-    attach_mixed_video_media,
-    build_aac_adts,
-    build_avi_mjpeg,
-    build_jpeg_hierarchical,
-    build_jpeg_lossless,
-    build_mp3_frames,
-    build_ogg_opus,
-    decode_aac_adts,
-    decode_avi_frames,
-    decode_jpeg_hierarchical,
-    decode_jpeg_lossless,
-    decode_jpeg_pixels,
-    decode_media,
-    decode_mp3_frames,
-    decode_ogg_opus,
-    decode_pixels,
-    decode_real,
-    decode_wav_samples,
-    extract_audio_stats,
-    extract_flac_stats,
-    extract_mixed_video_frames,
-    extract_pixel_stats,
-    extract_video_frames,
-)
-from optimal_parallel_fp_growth_spark.operators.flac import (
-    build_flac_samples,
-    flac_decode_pcm,
-)
-from optimal_parallel_fp_growth_spark.operators.video import (
-    build_avi_rle8,
-    build_gif_anim,
-    build_y4m,
-    decode_avi_rle8_frames,
-    decode_gif_frames,
-    decode_rle8_frame,
-    decode_y4m_frames,
-    encode_rle8_frame,
-)
-from optimal_parallel_fp_growth_spark.operators.bpe import (
-    apply_bpe,
-    train_bpe,
-)
-from optimal_parallel_fp_growth_spark.operators.html import (
-    attach_html,
-    extract_main_text,
-)
-from optimal_parallel_fp_growth_spark.operators.lm import (
-    score_perplexity,
-    train_bigram_lm,
-    train_ngram_lm,
-)
-from optimal_parallel_fp_growth_spark.streaming.stateful import (
-    first_seen_dedup,
-    first_seen_dedup_watermarked,
-    funnel_progress,
-    funnel_progress_watermarked,
-    heavy_hitters_stream,
-)
-from optimal_parallel_fp_growth_spark.streaming.events import (
-    correlate_streams,
-    enrich_stream,
-)
-from optimal_parallel_fp_growth_spark.streaming.neardup import (
-    streaming_neardup,
-)
 from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth, FPGrowthModel
-from optimal_parallel_fp_growth_spark.operators.ngrams import (
-    inverted_index,
-    ngram_counts,
-    repeated_spans,
-    source_ngram_overlap,
-)
-from optimal_parallel_fp_growth_spark.operators.sampling import (
-    corpus_split,
-    mix_by_temperature,
-    mix_sources,
-    negative_pairs,
-    stratified_sample,
-)
-from optimal_parallel_fp_growth_spark.operators.sessions import (
-    daily_rollup,
-    rolling_stats,
-    sessionize,
-)
-from optimal_parallel_fp_growth_spark.operators.similarity import (
-    ann_against_index,
-    ann_topk,
-    build_ivf_index,
-    cosine_topk,
-    drop_ivf_index,
-    embedding_neardup_pairs,
-    ivf_topk,
-    label_centroids,
-    random_projection,
-    ann_topk_hyperplane,
-    hard_negatives,
-)
-from optimal_parallel_fp_growth_spark.functions.skew import (
-    salted_agg,
-    salted_join,
-)
-from optimal_parallel_fp_growth_spark.functions.planview import (
-    PlanReport,
-    plan_report,
-)
-from optimal_parallel_fp_growth_spark.functions.caching import (
-    cache_scope,
-    release_cached_inputs,
-)
-from optimal_parallel_fp_growth_spark.operators.packing import (
-    chunk_documents,
-    pack_sequences,
-)
-from optimal_parallel_fp_growth_spark.operators.pii import pii_stats, redact_pii
-from optimal_parallel_fp_growth_spark.operators.quality_checks import (
-    check_suite,
-    documents_quality_suite,
-    events_quality_suite,
-)
-from optimal_parallel_fp_growth_spark.plans.curate import curate_corpus
-from optimal_parallel_fp_growth_spark.operators.funnels import (
-    cohort_retention,
-    funnel_counts,
-)
-from optimal_parallel_fp_growth_spark.operators.textops import (
-    gopher_rules,
-    doc_fingerprint,
-    lang_id,
-    quality_score,
-    repetition_signals,
-    text_stats,
-    tfidf_top_terms,
-    token_quantiles,
-)
-from optimal_parallel_fp_growth_spark.sources.compact import compact_files
-from optimal_parallel_fp_growth_spark.sources.versioned import (
-    aggregate_state,
-    append_table,
-    clone_table,
-    compact_table,
-    create_table,
-    create_view,
-    delete_rows,
-    overwrite_table,
-    present_aggregate,
-    read_table,
-    read_view,
-    refresh_aggregate,
-    restore_table,
-    stream_to_table,
-    sync_view,
-    table_changes,
-    table_history,
-    vacuum_table,
-    view_base_version,
-)
-from optimal_parallel_fp_growth_spark.sources.text_index import (
-    create_text_index,
-    index_base_version,
-    search_text_index,
-    sync_text_index,
-)
-from optimal_parallel_fp_growth_spark.sources.sinks import (
-    write_sharded,
-    write_sorted,
-    write_zordered,
-    zorder_key,
-)
 from optimal_parallel_fp_growth_spark.session import get_session
 from optimal_parallel_fp_growth_spark.sources.text import read_baskets_text
 
@@ -214,151 +17,6 @@ __all__ = [
     "FPGrowth",
     "FPGrowthModel",
     "read_baskets_text",
-    "dedup_exact",
-    "bloom_build",
-    "bloom_anti_join",
-    "bloom_semi_join",
-    "sketch_distinct",
-    "sketch_rollup",
-    "sketch_estimate",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_prefix",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "connected_components",
-    "dedup_clusters",
-    "deduped_corpus",
-    "build_minhash_index",
-    "dedup_against_index",
-    "drop_minhash_index",
-    "pagerank",
-    "decode_media",
-    "decode_real",
-    "decode_pixels",
-    "repeated_spans",
-    "train_bpe",
-    "apply_bpe",
-    "extract_audio_stats",
-    "decode_wav_samples",
-    "attach_html",
-    "build_aac_adts",
-    "build_avi_mjpeg",
-    "build_jpeg_lossless",
-    "build_mp3_frames",
-    "decode_aac_adts",
-    "decode_jpeg_lossless",
-    "extract_main_text",
-    "score_perplexity",
-    "train_bigram_lm",
-    "train_ngram_lm",
-    "decode_avi_frames",
-    "decode_jpeg_pixels",
-    "decode_mp3_frames",
-    "extract_video_frames",
-    "attach_flac_media",
-    "attach_gif_media",
-    "attach_mixed_video_media",
-    "build_flac_samples",
-    "build_jpeg_hierarchical",
-    "build_ogg_opus",
-    "build_avi_rle8",
-    "build_gif_anim",
-    "build_y4m",
-    "decode_jpeg_hierarchical",
-    "decode_ogg_opus",
-    "decode_avi_rle8_frames",
-    "decode_gif_frames",
-    "decode_rle8_frame",
-    "decode_y4m_frames",
-    "encode_rle8_frame",
-    "extract_flac_stats",
-    "extract_mixed_video_frames",
-    "flac_decode_pcm",
-    "extract_pixel_stats",
-    "first_seen_dedup",
-    "first_seen_dedup_watermarked",
-    "funnel_progress",
-    "funnel_progress_watermarked",
-    "heavy_hitters_stream",
-    "streaming_neardup",
-    "enrich_stream",
-    "correlate_streams",
-    "corpus_split",
-    "mix_sources",
-    "mix_by_temperature",
-    "stratified_sample",
-    "negative_pairs",
-    "ngram_counts",
-    "inverted_index",
-    "source_ngram_overlap",
-    "label_centroids",
-    "write_sharded",
-    "write_sorted",
-    "write_zordered",
-    "zorder_key",
-    "compact_files",
-    "create_table",
-    "append_table",
-    "overwrite_table",
-    "compact_table",
-    "read_table",
-    "table_history",
-    "table_changes",
-    "aggregate_state",
-    "refresh_aggregate",
-    "present_aggregate",
-    "create_view",
-    "sync_view",
-    "read_view",
-    "view_base_version",
-    "create_text_index",
-    "sync_text_index",
-    "search_text_index",
-    "index_base_version",
-    "delete_rows",
-    "restore_table",
-    "clone_table",
-    "vacuum_table",
-    "stream_to_table",
-    "salted_agg",
-    "salted_join",
-    "plan_report",
-    "PlanReport",
-    "token_quantiles",
-    "cosine_topk",
-    "ann_topk",
-    "ivf_topk",
-    "build_ivf_index",
-    "ann_against_index",
-    "random_projection",
-    "ann_topk_hyperplane",
-    "hard_negatives",
-    "drop_ivf_index",
-    "embedding_neardup_pairs",
-    "text_stats",
-    "gopher_rules",
-    "quality_score",
-    "lang_id",
-    "doc_fingerprint",
-    "repetition_signals",
-    "tfidf_top_terms",
-    "chunk_documents",
-    "pack_sequences",
-    "cache_scope",
-    "release_cached_inputs",
-    "pii_stats",
-    "redact_pii",
-    "check_suite",
-    "documents_quality_suite",
-    "events_quality_suite",
-    "curate_corpus",
-    "funnel_counts",
-    "cohort_retention",
-    "decontaminate",
-    "sessionize",
-    "rolling_stats",
-    "daily_rollup",
-    "asof_join_last_event",
 ]
 
 __version__ = "0.1.0"

@@ -3,15 +3,9 @@ from optimal_parallel_fp_growth_spark.functions.arrays import (
     has_duplicate_items,
     validate_unique_items,
 )
-from optimal_parallel_fp_growth_spark.functions.skew import (
-    deterministic_salt,
-    salted_agg,
-)
 
 __all__ = [
     "array_subset_of",
     "has_duplicate_items",
     "validate_unique_items",
-    "deterministic_salt",
-    "salted_agg",
 ]

@@ -36,12 +36,12 @@ def apriori_one_to_one_rules(
 ) -> DataFrame:
     """→ (antecedent: string, consequent: string, confidence, score)
     where score is the reference's confidence/rawCount quirk metric."""
-    n = transactions.count()
-    min_count = int(math.floor(min_support * n))
-
     tx = transactions.select(F.col(items_col).alias("items")).where(
         F.col("items").isNotNull()
     )
+    # N counts real baskets only, as FPGrowth.fit does: null rows must not
+    # inflate floor(s·N)
+    min_count = int(math.floor(min_support * tx.count()))
 
     singles = (
         tx.select(F.explode("items").alias("item"))

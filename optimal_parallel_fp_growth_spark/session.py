@@ -1,8 +1,10 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the config block is the
-one we'd ship to a 1000-executor cluster (AQE on, adaptive skew handling,
-Arrow for the few pandas-UDF paths). Nothing here is machine-specific.
+The engine always runs on ``local[$SPARK_GRAFT_CPUS]``: the driver and
+every Python worker share one filesystem, so the repo-root worker daemon
+module (``opfpg_daemon_preload``) is importable by construction. The
+other knobs are sizing-relative (AQE on, adaptive skew handling, Arrow
+for the pandas-UDF mining path); nothing here is machine-specific.
 """
 
 from __future__ import annotations
@@ -16,10 +18,9 @@ def get_session(app_name: str = "opfpg-spark", shuffle_partitions: int | None = 
     """Build (or fetch) the engine's SparkSession.
 
     Scale stance: every knob below is sizing-relative, not absolute —
-    AQE coalesces the 32 test shuffle partitions locally and would
-    re-split/skew-join on a real cluster; ``maxPartitionBytes`` keeps scan
-    tasks ~128 MB so a 100 TB input fans out to ~800k tasks instead of
-    overloading a few.
+    AQE coalesces the shuffle partitions to the data, and
+    ``maxPartitionBytes`` keeps scan tasks ~128 MB so a large input fans
+    out over many tasks instead of overloading a few.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -34,16 +35,12 @@ def get_session(app_name: str = "opfpg-spark", shuffle_partitions: int | None = 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # InferFiltersFromGenerate infers `size(x)>0 AND isnotnull(x)`
         # from every explode(x), and predicate pushdown then SUBSTITUTES
-        # x's defining expression below the exchange — for this engine's
-        # signature pattern (explode over a derived shingle/token array)
-        # that re-computes the tokenize→shingle chain 3× per row (twice
-        # in the pushed filter, once in the projection), in the SCAN
-        # stage. Measured r17: decontaminate 8.2 s → 2.3 s at sf0.1 with
-        # the rule excluded; at 100 TB the duplication is pure CPU waste
-        # on the hottest expression. The rule only ever prunes rows that
-        # explode() would drop anyway (no result change), and none of
-        # its inferred predicates are parquet-pushable here (guide §4.4:
-        # stop the optimizer duplicating expensive expressions).
+        # x's defining expression below the exchange, so an explode over
+        # a derived array (a tokenized text column, for instance)
+        # re-computes the derivation up to 3× per row in the scan stage.
+        # The rule only ever prunes rows that explode() would drop
+        # anyway (no result change), and none of its inferred predicates
+        # are parquet-pushable here.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
@@ -51,21 +48,13 @@ def get_session(app_name: str = "opfpg-spark", shuffle_partitions: int | None = 
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Python workers fork from a per-executor daemon; pre-importing
         # pandas/numpy/pyarrow IN the daemon (opfpg_daemon_preload.py,
-        # a repo-root module so ``python -m`` never executes the heavy
-        # engine package __init__) makes every forked worker inherit
-        # them via copy-on-write instead of paying the ~1 s import
-        # chain per worker on its first Arrow batch (VERDICT r17 task
-        # #6 — the measured floor of a session's first Arrow stage).
-        # OPFPG_DAEMON_PRELOAD=0 opts out (and restores the stock
-        # daemon) for A/B.
-        .config(
-            "spark.python.daemon.module",
-            "opfpg_daemon_preload"
-            if os.environ.get("OPFPG_DAEMON_PRELOAD", "1") != "0"
-            else "pyspark.daemon",
-        )
+        # a repo-root module so ``python -m`` never executes the engine
+        # package __init__) makes every forked worker inherit them via
+        # copy-on-write instead of paying the ~1 s import chain per
+        # worker on its first Arrow batch.
+        .config("spark.python.daemon.module", "opfpg_daemon_preload")
         # the daemon module must be importable by the worker python
-        # regardless of the launch directory
+        # regardless of the launch directory (local mode: same host)
         .config(
             "spark.executorEnv.PYTHONPATH",
             os.pathsep.join(

@@ -1,4 +1,4 @@
-from optimal_parallel_fp_growth_spark.sources.catalog import TABLES, load_table, register_views
+from optimal_parallel_fp_growth_spark.sources.catalog import TABLES, load_table
 from optimal_parallel_fp_growth_spark.sources.text import read_baskets_text
 
-__all__ = ["TABLES", "load_table", "register_views", "read_baskets_text"]
+__all__ = ["TABLES", "load_table", "read_baskets_text"]

@@ -18,7 +18,3 @@ def read_baskets_text(spark: SparkSession, path: str, items_col: str = "items") 
         F.array_distinct(F.split(F.col("value"), " ")).alias(items_col)
     )
 
-
-def baskets_from_text_column(df: DataFrame, text_col: str = "text", items_col: str = "items") -> DataFrame:
-    """Same tokenize+distinct over an existing string column (e.g. documents.text)."""
-    return df.withColumn(items_col, F.array_distinct(F.split(F.col(text_col), " ")))

@@ -21,8 +21,6 @@ from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_events,
 )
 
-pytestmark = pytest.mark.fpm
-
 
 def _brute(baskets, min_support, min_confidence):
     n = len(baskets)
@@ -137,3 +135,17 @@ def test_pair_generation_stays_map_side(spark):
     assert "SortMergeJoin" not in plan
     # the only joins are the two broadcast metric joins
     assert plan.count("BroadcastHashJoin") == 2, plan
+
+
+def test_null_baskets_do_not_count_toward_n(spark):
+    """N is the number of non-null baskets, as in FPGrowth.fit: three
+    null rows beside three real baskets must not double floor(s·N)."""
+    baskets = [["a", "b"], ["a", "b"], ["a", "c"]]
+    df = spark.createDataFrame(
+        [(b,) for b in baskets] + [(None,)] * 3, "items array<string>"
+    )
+    got = _collect(apriori_one_to_one_rules(df, min_support=0.5))
+    want = _brute([set(b) for b in baskets], 0.5, 0.2)
+    assert len(want) == 4 and set(got) == set(want)
+    for k, (conf, score) in want.items():
+        assert math.isclose(got[k][0], conf) and math.isclose(got[k][1], score), k
