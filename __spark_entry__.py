@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship pipeline (FP-Growth fit → association
-rules) on sf0.001; ``queries()``/``oracle_sql()`` expose the 12 FPM
-queries (counts, mining, rules and prediction) with DuckDB oracles.
+rules) on sf0.001; ``queries()``/``oracle_sql()`` expose every
+implemented operator from SURVEY.md §2 with DuckDB oracles.
 """
 
 from __future__ import annotations

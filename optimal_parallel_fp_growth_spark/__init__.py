@@ -4,6 +4,13 @@ EPFP (load-balanced Parallel FP-Growth) or Apriori, association rules
 derived from them, and recommendations served from the rules. Built on
 DataFrames, so Catalyst plans every stage.
 
+The package root imports only that engine, so importing it (as every
+Python worker of the mining stage does) loads no pandas, numpy or
+pyarrow. The other operators (dedup, similarity search, text analysis,
+multimodal plumbing, versioned tables, streaming) are imported from
+their own modules under ``operators/``, ``sources/``, ``functions/``,
+``plans/`` and ``streaming/``.
+
 Reference parity citations such as ``epfp/EPFP.scala:26`` are paths in
 the reference repository.
 """

@@ -1,11 +1,22 @@
-"""Timestamp normalization that is independent of the session time zone.
+"""Timestamp → epoch conversion that is correct for BOTH timestamp
+flavors and independent of the session time zone.
 
 Spark 4 refuses ``cast(timestamp_ntz AS long)``, and the obvious
 workarounds (``unix_timestamp``, an LTZ hop) interpret the NTZ wall
 clock in the SESSION time zone — correct only when the driver session
 happens to run UTC. The oracles (DuckDB ``epoch_us``) instead define
 the epoch of a naive timestamp by treating its wall clock as UTC, so
-the engine must pin that interpretation explicitly.
+the engine must pin that interpretation explicitly:
+
+- TIMESTAMP_NTZ: whole seconds since the naive epoch via
+  ``timestampdiff`` — a pure wall-clock difference, no zone anywhere.
+- TIMESTAMP (LTZ): an absolute instant; ``cast long`` IS its epoch.
+
+Keeping date-like parquet columns (o_orderdate, l_shipdate) in their
+native NTZ type — rather than rewriting them at the scan like
+``catalog.load_table`` does for events.ts — preserves parquet filter
+pushdown on them (a wrapped column defeats PushedFilters; the
+plan-quality tests pin this).
 """
 
 from __future__ import annotations
@@ -14,6 +25,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
+
+
+def epoch_seconds(source: DataFrame, col: str) -> Column:
+    """Whole-second epoch of timestamp column ``col``; ``source`` is
+    any DataFrame carrying the column's dtype (typically the scan it
+    originated from — the returned Column resolves by name in whatever
+    plan it is used).
+
+    FLOOR semantics on the NTZ branch: ``cast(timestamp AS long)``
+    floors, while ``timestampdiff(SECOND, …)`` truncates toward zero —
+    the two disagree by 1s on pre-epoch fractional timestamps. The
+    micros diff with an exact integer floor-div (subtract the
+    non-negative ``pmod`` remainder first, so the division stays in
+    long arithmetic) makes both branches agree everywhere.
+    """
+    dtype = dict(source.dtypes).get(col)
+    if dtype == "timestamp_ntz":
+        m = f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, `{col}`)"
+        return F.expr(f"(({m}) - pmod({m}, 1000000)) div 1000000")
+    return F.col(col).cast("long")
 
 
 def wall_utc_timestamp(source: DataFrame, col: str) -> Column:

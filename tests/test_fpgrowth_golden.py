@@ -6,6 +6,8 @@ import pytest
 
 from optimal_parallel_fp_growth_spark import FPGrowth
 
+pytestmark = pytest.mark.fpm
+
 GOLDEN_ITEMSETS = {
     ("I1",): 3,
     ("I2",): 4,

@@ -14,6 +14,8 @@ from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_events,
 )
 
+pytestmark = pytest.mark.fpm
+
 
 def _ours(model, min_conf):
     return {

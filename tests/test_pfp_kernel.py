@@ -17,6 +17,8 @@ from optimal_parallel_fp_growth_spark.plans.transactions import (
     transactions_from_lineitem,
 )
 
+pytestmark = pytest.mark.fpm
+
 
 def as_dict(df):
     return {tuple(r["items"]): r["freq"] for r in df.collect()}

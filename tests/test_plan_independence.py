@@ -7,7 +7,7 @@ import pytest
 
 from optimal_parallel_fp_growth_spark.queries import QUERIES
 
-NAMES = ["transform"]
+NAMES = ["revenue_by_nation", "top_suppliers_per_nation", "transform", "knn_ann"]
 
 
 @pytest.mark.parametrize("name", NAMES)

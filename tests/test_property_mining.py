@@ -15,6 +15,8 @@ from hypothesis import strategies as st
 
 from fpm_spec import predict
 
+pytestmark = pytest.mark.fpm
+
 ALPHABET = ["a", "b", "c", "d", "e"]
 
 baskets_strategy = st.lists(
