@@ -95,15 +95,12 @@ class FPGrowthModel:
         rules through ``makeRDD(...).toDF``; we stay on the rules
         DataFrame (already bounded) and reuse the declarative
         transform."""
-        rules = self.association_rules(min_confidence)
-        baskets = rules.select(F.col("antecedent").alias(self.items_col)).distinct()
-        return transform_with_rules(
-            baskets,
-            rules,
-            items_col=self.items_col,
-            prediction_col=self.prediction_col,
-            keep_array=keep_array,
+        baskets = (
+            self.association_rules(min_confidence)
+            .select(F.col("antecedent").alias(self.items_col))
+            .distinct()
         )
+        return self.transform(baskets, min_confidence, keep_array)
 
 
 class FPGrowth:

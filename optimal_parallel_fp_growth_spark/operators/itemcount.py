@@ -23,7 +23,9 @@ def freq_items(
     num_transactions: int | None = None,
 ) -> DataFrame:
     """(item, freq) for items with freq ≥ ceil(min_support · N),
-    frequency-descending (the FP rank order)."""
+    frequency-descending (the FP rank order). Null baskets are dropped
+    before N is counted, as in ``FPGrowth.fit``."""
+    transactions = transactions.where(F.col(items_col).isNotNull())
     n = num_transactions if num_transactions is not None else transactions.count()
     min_count = int(math.ceil(min_support * n))
     return (

@@ -6,12 +6,21 @@ consequent items deduped (first = highest lift wins), minus items the
 basket already owns, as BOTH an array (``prediction_items``) and the
 reference's ", "-joined string (``mkString(", ")``, FPGrowth.scala:144).
 
-The reference collects the rules to the driver and broadcasts them into a
-row-at-a-time UDF (FPGrowth.scala:124-148). We keep the same physical
-shape — rules are the small side — but stay declarative: a broadcast
-nested-loop join with an ``array_except``-subset theta predicate, then a
-per-row ordered re-aggregation. Everything is built-in functions
-(whole-stage codegen); no Python UDF.
+A prediction depends only on its own basket, so the reference collects
+the rules and broadcasts them into a row-at-a-time function
+(FPGrowth.scala:124-148). We keep that physical shape with built-in
+functions only (whole-stage codegen, no Python UDF):
+
+- the rules are packed into ONE row, an array sorted once per call into
+  the total order (lift desc, null lift last, then consequent asc);
+- that row is broadcast and cross-joined onto the dataset (a
+  ``BroadcastNestedLoopJoin`` against a single row);
+- each row filters the array with the subset and ownership predicates
+  and keeps the first occurrence of each consequent.
+
+The dataset side is a pure projection: no shuffle, no aggregate, and its
+rows, their multiplicity and their extra columns pass through unchanged.
+The only exchanges are on the one-row rule side.
 
 Tie-break: the reference's ``sortBy(lift desc)`` is unstable under lift
 ties; we define the total order (lift desc, consequent asc) documented in
@@ -23,7 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from optimal_parallel_fp_growth_spark.functions.arrays import array_subset_of
+from optimal_parallel_fp_growth_spark.functions.arrays import (
+    array_has,
+    array_subset_of,
+)
 
 
 def transform_with_rules(
@@ -39,84 +51,41 @@ def transform_with_rules(
     ``rules`` must have (antecedent: array, consequent: array[1], lift).
     Null baskets predict null (FPGrowth.scala:146); baskets matching no
     rule predict [] / "" (the reference's empty-string quirk,
-    pfp/PFP.scala:48).
-
-    Physical shape: the prediction is a pure function of the basket, so
-    we evaluate the (broadcast) rule nested-loop join once per DISTINCT
-    basket and equi-join the results back on the array key — smaller NLJ
-    input than per-row, and multiplicity/extra columns of ``dataset`` are
-    preserved by the join-back.
+    pfp/PFP.scala:48). ``{prediction_col}_items`` has the rules' item
+    type, i.e. the basket's element type for a model fitted on it.
     """
-    for c in (prediction_col, f"{prediction_col}_items"):
+    items_out = f"{prediction_col}_items"
+    for c in (prediction_col, items_out):
         if c in dataset.columns:
             raise ValueError(f"output column {c!r} already exists in dataset")
 
-    baskets = (
-        dataset.select(F.col(items_col).alias("__basket"))
-        .where(F.col("__basket").isNotNull())
-        .distinct()
-    )
-
-    flat_rules = rules.select(
-        F.col("antecedent"),
-        F.element_at("consequent", 1).alias("consequent_item"),
-        F.col("lift"),
-    )
-
-    # Broadcast NL join: rules are bounded (collected+broadcast in the
-    # reference too); the subset predicate stays JVM-side.
-    matched = baskets.join(
-        F.broadcast(flat_rules),
-        array_subset_of("antecedent", "__basket")
-        & ~F.array_contains(F.col("__basket"), F.col("consequent_item")),
-        "inner",
-    )
-
-    # Ordered, deduped consequents per basket: collect (lift desc, item
-    # asc) structs, array_sort gives the total order, array_distinct keeps
-    # the first (= highest-lift) occurrence of each item.
-    preds = (
-        matched.groupBy("__basket")
-        .agg(
-            F.array_distinct(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                # Null lift → -inf priority (sorts
-                                # last); without the coalesce a null
-                                # neg_lift would sort FIRST here.
-                                (-F.coalesce(
-                                    F.col("lift"),
-                                    F.lit(float("-inf")),
-                                )).alias("neg_lift"),
-                                F.col("consequent_item").alias("item"),
-                            )
-                        )
-                    ),
-                    lambda s: s["item"],
+    # One row: every rule in the total order. Null lift → +inf sort key,
+    # so it sorts last; array_sort over an empty rule set gives [].
+    ranked = rules.agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    (-F.coalesce(F.col("lift"), F.lit(float("-inf")))).alias("neg_lift"),
+                    F.element_at("consequent", 1).alias("item"),
+                    F.col("antecedent"),
                 )
-            ).alias("__pred_items")
-        )
+            )
+        ).alias("__rules")
     )
 
+    basket = F.col(items_col)
+    matched = F.filter(
+        "__rules",
+        lambda r: array_subset_of(r["antecedent"], basket) & ~array_has(basket, r["item"]),
+    )
+    # array_distinct keeps the first (= highest-lift) occurrence of each item.
     out = (
-        dataset.join(preds, F.col(items_col).eqNullSafe(F.col("__basket")), "left")
-        .drop("__basket")
+        dataset.crossJoin(F.broadcast(ranked))
         .withColumn(
-            "__pred_items",
-            F.when(F.col(items_col).isNull(), F.lit(None).cast("array<string>"))
-            .otherwise(F.coalesce(F.col("__pred_items"), F.array().cast("array<string>"))),
+            items_out,
+            F.when(basket.isNotNull(), F.array_distinct(F.transform(matched, lambda r: r["item"]))),
         )
-        .withColumn(
-            prediction_col,
-            F.when(F.col(items_col).isNull(), F.lit(None).cast("string"))
-            .otherwise(F.array_join(F.col("__pred_items"), ", ")),
-        )
+        .withColumn(prediction_col, F.array_join(items_out, ", "))
+        .drop("__rules")
     )
-    if keep_array:
-        out = out.withColumnRenamed("__pred_items", f"{prediction_col}_items")
-    else:
-        out = out.drop("__pred_items")
-    return out
-
+    return out if keep_array else out.drop(items_out)

@@ -10,6 +10,7 @@ import pytest
 from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 
 
+@pytest.mark.fpm
 def test_model_inherits_estimator_min_confidence(fpm_train):
     """FPGrowth(min_confidence=x).fit(df).transform(df) must apply x,
     not a hard-coded 0.8 (epfp/FPGrowth.scala genericFit attaches
@@ -38,6 +39,7 @@ def test_model_inherits_estimator_min_confidence(fpm_train):
     assert n_low > n_high
 
 
+@pytest.mark.fpm
 def test_null_lift_rules_order_identically_across_strategies(spark):
     """Externally supplied rules with null lift must sort LAST (-inf) in
     transform, exactly as in the pure-Python spec, not first."""
@@ -140,6 +142,7 @@ def test_release_covers_pagerank_blocks(spark, sf_small):
     assert not leaked, f"leaked persistent RDDs: {leaked}"
 
 
+@pytest.mark.fpm
 def test_model_unpersist_releases_rules_and_itemsets(fpm_train):
     model = FPGrowth(min_support=0.4, min_confidence=0.6).fit(fpm_train)
     rules = model.association_rules()
@@ -150,6 +153,7 @@ def test_model_unpersist_releases_rules_and_itemsets(fpm_train):
     assert not rules.storageLevel.useMemory
 
 
+@pytest.mark.fpm
 def test_transform_self_matches_manual(fpm_train):
     """transform_self == transform over the distinct rule antecedents
     (pfp/FPGrowth.scala:124-148 round-trips them through makeRDD)."""

@@ -18,6 +18,7 @@ def txt(tmp_path):
     return str(train), str(test)
 
 
+@pytest.mark.fpm
 def test_cli_mine(spark, txt, capsys):
     from optimal_parallel_fp_growth_spark.cli import main
 
@@ -29,6 +30,7 @@ def test_cli_mine(spark, txt, capsys):
     assert "{I5} => {I1}: 1.0" in out  # textbook certainty rule
 
 
+@pytest.mark.fpm
 def test_cli_transform_pandas_kernel(spark, txt, capsys):
     from optimal_parallel_fp_growth_spark.cli import main
 
@@ -42,6 +44,7 @@ def test_cli_transform_pandas_kernel(spark, txt, capsys):
     assert "->" in out and out.count("\n") >= 3
 
 
+@pytest.mark.fpm
 def test_cli_recommend(spark, txt, capsys):
     from optimal_parallel_fp_growth_spark.cli import main
 

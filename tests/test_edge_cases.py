@@ -56,3 +56,36 @@ def test_transform_preserves_duplicate_rows(spark, fpm_train):
     doubled = fpm_train.unionByName(fpm_train)
     out = model.transform(doubled, min_confidence=0.5)
     assert out.count() == 2 * fpm_train.count()
+
+
+def test_freq_items_ignores_null_baskets(spark):
+    """N counts only non-null baskets, as in FPGrowth.fit."""
+    from optimal_parallel_fp_growth_spark.operators.itemcount import freq_items
+
+    tx = spark.createDataFrame(
+        [(["a", "b"],), (["a", "b"],), (["a", "c"],), (None,), (None,), (None,)],
+        "items array<string>",
+    )
+    got = {r.item: r.freq for r in freq_items(tx, min_support=0.5).collect()}
+    fis = FPGrowth(min_support=0.5).fit(tx).freq_itemsets.where(F.size("items") == 1)
+    assert got == {"a": 3, "b": 2} == {r["items"][0]: r.freq for r in fis.collect()}
+
+
+@pytest.mark.parametrize("kernel", ["mllib", "pandas"])
+@pytest.mark.parametrize(
+    "min_support, want",
+    [
+        (1.0, {("x",): 5}),
+        # N = 5: ceil(0.4 * 5) = 2 keeps count 2; ceil(0.41 * 5) = 3 does not
+        (0.4, {("x",): 5, ("b",): 3, ("a",): 2, ("b", "x"): 3, ("a", "x"): 2}),
+        (0.41, {("x",): 5, ("b",): 3, ("b", "x"): 3}),
+    ],
+)
+def test_min_support_boundaries(spark, kernel, min_support, want):
+    tx = spark.createDataFrame(
+        [(["x", "a"],), (["x", "a"],), (["x", "b"],), (["x", "b"],), (["x", "b"],)],
+        "items array<string>",
+    )
+    model = FPGrowth(min_support=min_support, kernel=kernel).fit(tx)
+    got = {tuple(sorted(r["items"])): r.freq for r in model.freq_itemsets.collect()}
+    assert got == want

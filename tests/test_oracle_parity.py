@@ -38,7 +38,16 @@ def duck(sf_oracle):
     con.close()
 
 
-NAMES = sorted(entry_mod.queries().keys())
+# Queries that run the FPM engine (mining, rules, transform, item counts).
+FPM_QUERIES = {
+    "apriori_rules", "assoc_rules", "count_rows", "freq_items", "freq_itemsets",
+    "freq_itemsets_by_lang", "freq_itemsets_docs", "freq_itemsets_pfp",
+    "tokenize_distinct", "transform", "transform_self", "word_count",
+}
+NAMES = [
+    pytest.param(n, marks=pytest.mark.fpm) if n in FPM_QUERIES else n
+    for n in sorted(entry_mod.queries().keys())
+]
 
 
 def test_every_query_has_callable_and_most_have_oracles():

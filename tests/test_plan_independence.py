@@ -7,7 +7,12 @@ import pytest
 
 from optimal_parallel_fp_growth_spark.queries import QUERIES
 
-NAMES = ["revenue_by_nation", "top_suppliers_per_nation", "transform", "knn_ann"]
+NAMES = [
+    "revenue_by_nation",
+    "top_suppliers_per_nation",
+    pytest.param("transform", marks=pytest.mark.fpm),
+    "knn_ann",
+]
 
 
 @pytest.mark.parametrize("name", NAMES)

@@ -4,6 +4,7 @@ generic item types in the mining kernel (SURVEY §1.2)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
@@ -17,6 +18,7 @@ from optimal_parallel_fp_growth_spark.sources.sinks import (
 from optimal_parallel_fp_growth_spark.sources.text import read_baskets_text
 
 
+@pytest.mark.fpm
 def test_text_basket_source(spark, tmp_path):
     p = tmp_path / "baskets.txt"
     p.write_text("I1 I2 I5 I2\nI2 I4\n\n")
@@ -59,6 +61,7 @@ def test_orc_roundtrip(spark, sf_small, tmp_path):
     assert {tuple(r) for r in back.collect()} == {tuple(r) for r in nation.collect()}
 
 
+@pytest.mark.fpm
 def test_mining_accepts_int_items(spark):
     """SURVEY §1.2: the reference core is generic over the item type;
     both kernels must accept array<int>/array<long> too."""

@@ -64,3 +64,67 @@ def test_transform_items_match_spec(spark, fpm_train, fpm_test, sf_small):
             for r in test.collect()
         }
         assert got == want and any(want.values())
+
+
+def test_null_items_match_spec(spark):
+    """A basket holding a null item is still answered: a null element
+    never hides a non-null item, and a null item matches a null
+    element, in both the subset and the ownership test."""
+    train = spark.createDataFrame(
+        [(["a", None],), (["a", None, "b"],), (["a", None, "b"],), ([None, "b"],)],
+        "items array<string>",
+    )
+    rules = FPGrowth(kernel="pandas", min_support=0.5).fit(train).association_rules(0.1)
+    rule_rows = rules.collect()
+    probes = spark.createDataFrame(
+        [(1, ["a", None]), (2, [None]), (3, ["a"]), (4, None), (5, ["c"])],
+        "tid long, items array<string>",
+    )
+    got = {r.tid: (r.prediction, r.prediction_items)
+           for r in transform_with_rules(probes, rules).collect()}
+    want = {r.tid: (predict(rule_rows, r["items"]), predict_items(rule_rows, r["items"]))
+            for r in probes.collect()}
+    assert got == want
+    assert got[1] == ("b", ["b"]) and got[2] == ("a, b", ["a", "b"])
+
+
+def test_int_baskets_keep_element_type(spark):
+    tx = spark.createDataFrame(
+        [([1, 2, 5],), ([2, 4],), ([2, 3],), ([1, 3],), ([4, 2, 5, 1],), (None,)],
+        "items array<int>",
+    )
+    model = FPGrowth(min_support=0.4, min_confidence=0.5).fit(tx)
+    out = model.transform(tx)
+    assert dict(out.dtypes)["prediction_items"] == "array<int>"
+    rule_rows = model.association_rules().collect()
+    got = sorted((r["items"] or [], r.prediction_items) for r in out.collect())
+    want = sorted((r["items"] or [], predict_items(rule_rows, r["items"])) for r in tx.collect())
+    assert got == want
+
+
+def _plan_nodes(plan):
+    """Every physical node reachable through ``children()``; AQE's
+    current plan (exchanges included) stands in for the adaptive
+    wrapper. Cached relations are leaves, so a cached input's own plan
+    is not walked."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    kids = plan.children()
+    yield plan
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def test_transform_plan_is_one_projection(spark, fpm_train):
+    """Rule application is a per-row projection over the dataset: the
+    rules are packed into one broadcast row, so the dataset side has no
+    exchange and no aggregate, and no hash exchange appears anywhere."""
+    model = FPGrowth(min_support=0.4, min_confidence=0.5).fit(fpm_train)
+    plan = model.transform(fpm_train)._jdf.queryExecution().executedPlan()
+    nodes = list(_plan_nodes(plan))
+    assert not [n for n in nodes if "hashpartitioning" in n.simpleString(100)]
+    (join,) = [n for n in nodes if n.nodeName() == "BroadcastNestedLoopJoin"]
+    basket_side = [n.nodeName() for n in _plan_nodes(join.left())]
+    assert not [n for n in basket_side if "Exchange" in n or "Aggregate" in n], basket_side
+    rule_side = [n.nodeName() for n in _plan_nodes(join.right())]
+    assert "BroadcastExchange" in rule_side and any("Aggregate" in n for n in rule_side)
