@@ -27,17 +27,19 @@ stage 3  combine             — ``groupBy(corpus, group, ranks).count()``:
                                the reference's ``aggregateByKey`` tree
                                combine (O4) declaratively.
 stage 4  group mining        — ``groupBy(corpus, group).applyInPandas``:
-                               build an FP-tree per group, extract
-                               patterns whose suffix item the group owns
-                               (duplicate suppression O5,
+                               pattern growth by prefix projection over
+                               the group's conditional DB (PrefixFPM),
+                               emitting patterns whose suffix item the
+                               group owns (duplicate suppression O5,
                                FPTree.scala:85-97), decode ranks → items.
 
 Group assignment uses the EPFP balanced partitioner (O6) by default,
 PFP's hash assignment otherwise — see operators/balanced.py.
 
-Scale note: one group's FP-tree lives in one Python worker's heap; group
-count should scale with data (``num_partitions``), and the MLlib kernel
-remains the default for the largest inputs (SURVEY §7.4).
+Scale note: one group's conditional DB and its projections live in one
+Python worker's heap; group count should scale with data
+(``num_partitions``), and the MLlib kernel remains the default for the
+largest inputs (SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -54,64 +56,40 @@ from optimal_parallel_fp_growth_spark.operators.balanced import (
     hash_group_assignment,
 )
 
-# ---------------------------------------------------------------------------
-# FP-tree (per-group, worker-local). Ranks are ints, frequency-descending;
-# transactions are inserted in ascending-rank order.
+# One group's conditional DB must fit a Python worker's heap; a group with
+# more distinct conditional transactions fails loudly with actionable
+# advice instead of OOMing the executor.
+_MAX_GROUP_ROWS = 5_000_000
 
 
-class _Node:
-    __slots__ = ("item", "count", "parent", "children")
-
-    def __init__(self, item: int | None, parent: "_Node | None"):
-        self.item = item
-        self.count = 0
-        self.parent = parent
-        self.children: dict[int, _Node] = {}
-
-
-def _build_tree(transactions: Iterator[tuple[tuple[int, ...], int]]):
-    """→ (root, header) where header[rank] = list of nodes for that rank."""
-    root = _Node(None, None)
-    header: dict[int, list[_Node]] = {}
-    for ranks, cnt in transactions:
-        node = root
+def _mine(db, suffix, min_count, owns, out):
+    """Pattern growth by prefix projection. ``db`` is a list of (ranks
+    tuple ascending, count); ranks are ints, frequency-descending. Every
+    frequent rank r extends ``suffix`` and is mined again over its
+    projection: the prefix before r of every transaction holding r, with
+    identical prefixes merged. ``owns`` filters r at the top level only
+    (duplicate suppression O5, FPTree.scala:85-97); None emits every
+    frequent rank."""
+    support: dict[int, int] = {}
+    for ranks, cnt in db:
         for r in ranks:
-            child = node.children.get(r)
-            if child is None:
-                child = _Node(r, node)
-                node.children[r] = child
-                header.setdefault(r, []).append(child)
-            child.count += cnt
-            node = child
-    return root, header
-
-
-def _mine_tree(header, suffix, min_count, owns, out):
-    """Recursive FP-Growth extraction. ``owns`` filters the top-level
-    suffix item (None below the top level → emit everything frequent)."""
-    for r in header:
-        support = sum(n.count for n in header[r])
-        if support < min_count or (owns is not None and not owns(r)):
-            continue
+            support[r] = support.get(r, 0) + cnt
+    projections: dict[int, dict[tuple[int, ...], int]] = {
+        r: {}
+        for r, s in support.items()
+        if s >= min_count and (owns is None or owns(r))
+    }
+    for ranks, cnt in db:
+        for i, r in enumerate(ranks):
+            proj = projections.get(r)
+            if proj is not None and i:
+                prefix = ranks[:i]
+                proj[prefix] = proj.get(prefix, 0) + cnt
+    for r, proj in projections.items():
         pattern = suffix + (r,)
-        out.append((pattern, support))
-        # conditional pattern base: paths above every node of r
-        cond = []
-        for node in header[r]:
-            path = []
-            p = node.parent
-            while p.item is not None:
-                path.append(p.item)
-                p = p.parent
-            if path:
-                path.reverse()
-                cond.append((tuple(path), node.count))
-        if cond:
-            _, sub_header = _build_tree(cond)
-            _mine_tree(sub_header, pattern, min_count, None, out)
-
-
-# ---------------------------------------------------------------------------
+        out.append((pattern, support[r]))
+        if proj:
+            _mine(list(proj.items()), pattern, min_count, None, out)
 
 
 def mine_pandas(
@@ -265,11 +243,10 @@ def _mine_by_corpus(
         F.count("*").alias("cnt")
     )
 
-    # One group's conditional DB must fit a Python worker's heap; fail
-    # loudly with actionable advice instead of OOMing the executor.
-    max_group_rows = 5_000_000
+    # Bound here so the pickled closure carries the value.
+    max_group_rows = _MAX_GROUP_ROWS
 
-    # stage 4 — per-(corpus, group) tree build + extraction + rank decode
+    # stage 4 — per-(corpus, group) projection mining + rank decode
     def mine_group(pdf: pd.DataFrame) -> pd.DataFrame:
         corpus = pdf["corpus"].iloc[0]
         group = int(pdf["group"].iloc[0])
@@ -283,12 +260,12 @@ def _mine_by_corpus(
         _, r2i, asg, mcs = bc.value
         group_of = asg[corpus]
         decode = r2i[corpus]
-        _, header = _build_tree(
-            (tuple(ranks), int(cnt))
+        db = [
+            (tuple(ranks.tolist()), int(cnt))
             for ranks, cnt in zip(pdf["ranks"], pdf["cnt"])
-        )
+        ]
         patterns: list[tuple[tuple[int, ...], int]] = []
-        _mine_tree(header, (), mcs[corpus], lambda r: group_of[r] == group, patterns)
+        _mine(db, (), mcs[corpus], lambda r: group_of[r] == group, patterns)
         return pd.DataFrame(
             {
                 "corpus": pd.Series([corpus] * len(patterns), dtype="object"),
@@ -301,7 +278,7 @@ def _mine_by_corpus(
 
     # Pin the mining stage's parallelism. Its shuffle is bytes-tiny
     # (combined conditional transactions), so AQE's bytes-advisory
-    # coalescing packs the COMPUTE-bound Python tree mining into a
+    # coalescing packs the COMPUTE-bound Python mining into a
     # handful of tasks (measured r17: 3 tasks for a 40-group run).
     # An explicit hash repartition on the group key is exempt from AQE
     # coalescing and satisfies the groupBy's clustering, so no second

@@ -33,26 +33,28 @@ def association_rules(
     (antecedent, consequent, confidence, lift, support).
 
     Items arrays MUST be canonically sorted (array_sort) on input: the
-    antecedent equi-join compares arrays by value, and ``array_remove`` of
-    a sorted array stays sorted, so no re-sort is needed at join time.
+    antecedent equi-join compares arrays by value, and dropping one
+    position of a sorted array leaves it sorted, so no re-sort is needed
+    at join time.
     """
     if not 0.0 <= min_confidence <= 1.0:
         raise ValueError(f"minConfidence must be in [0,1] but got {min_confidence}")
 
     itemsets = freq_itemsets.select("items", "freq")
 
-    # (1) candidate generation: one row per (itemset, member item)
+    # (1) candidate generation: one row per (itemset, member position).
+    # The antecedent drops the consequent by position, so a null item is
+    # removed like any other (array_remove(items, null) would be null).
     candidates = (
         itemsets.where(F.size("items") >= 2)
         .select(
             F.col("items"),
             F.col("freq").alias("freq_union"),
-            F.explode("items").alias("consequent_item"),
+            F.posexplode("items").alias("pos", "item"),
         )
         .select(
-            F.array_remove("items", F.col("consequent_item")).alias("antecedent"),
-            F.array(F.col("consequent_item")).alias("consequent"),
-            F.col("consequent_item"),
+            F.filter("items", lambda _, i: i != F.col("pos")).alias("antecedent"),
+            F.array(F.col("item")).alias("consequent"),
             F.col("freq_union"),
         )
     )
@@ -64,16 +66,18 @@ def association_rules(
     joined = candidates.join(antecedent_freq, on="antecedent", how="inner")
 
     # (3) consequent support for lift — left join so unknown consequents
-    # yield null lift (parity with r.lift.orNull, FPGrowth.scala:181)
+    # yield null lift (parity with r.lift.orNull, FPGrowth.scala:181). The
+    # key is the one-item array: array keys match null elements, a scalar
+    # null key matches nothing.
     consequent_support = (
         itemsets.where(F.size("items") == 1)
         .select(
-            F.element_at("items", 1).alias("consequent_item"),
+            F.col("items").alias("consequent"),
             (F.col("freq") / F.lit(float(num_transactions))).alias("support_consequent"),
         )
     )
     rules = (
-        joined.join(F.broadcast(consequent_support), on="consequent_item", how="left")
+        joined.join(F.broadcast(consequent_support), on="consequent", how="left")
         .select(
             "antecedent",
             "consequent",

@@ -4,7 +4,8 @@ Reproduces ``epfp/FPGrowth.scala:123-150``: for each input basket, take
 every rule whose antecedent ⊆ basket, order by lift desc, emit the
 consequent items deduped (first = highest lift wins), minus items the
 basket already owns, as BOTH an array (``prediction_items``) and the
-reference's ", "-joined string (``mkString(", ")``, FPGrowth.scala:144).
+reference's ", "-joined string (``mkString(", ")``, FPGrowth.scala:144,
+which renders a null item as ``null``).
 
 A prediction depends only on its own basket, so the reference collects
 the rules and broadcasts them into a row-at-a-time function
@@ -85,7 +86,7 @@ def transform_with_rules(
             items_out,
             F.when(basket.isNotNull(), F.array_distinct(F.transform(matched, lambda r: r["item"]))),
         )
-        .withColumn(prediction_col, F.array_join(items_out, ", "))
+        .withColumn(prediction_col, F.array_join(items_out, ", ", "null"))
         .drop("__rules")
     )
     return out if keep_array else out.drop(items_out)

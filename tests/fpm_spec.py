@@ -1,17 +1,39 @@
-"""Pure-Python specification of rule application (``model.transform``).
+"""Pure-Python specification of the FPM semantics: frequent itemsets and
+rule application (``model.transform``).
 
-Every rule whose antecedent is a subset of the basket contributes its
-consequent. Rules are taken in order of lift descending, then consequent
-ascending, with a null lift treated as -inf (sorts last). Consequents are
-deduplicated keeping the first occurrence, and items the basket already
-owns are excluded. A null basket predicts ``None``; a basket no rule
-matches predicts ``""`` (the string) or ``[]`` (the items).
+Frequent itemsets: every itemset that occurs in at least ``min_count``
+baskets, with that count as its frequency, found by brute-force
+enumeration of each basket's subsets.
+
+Rule application: every rule whose antecedent is a subset of the basket
+contributes its consequent. Rules are taken in order of lift descending,
+then consequent ascending, with a null lift treated as -inf (sorts last).
+Consequents are deduplicated keeping the first occurrence, and items the
+basket already owns are excluded. A null basket predicts ``None``; a
+basket no rule matches predicts ``""`` (the string) or ``[]`` (the items).
+A null item is an item: it sorts first among consequents of equal lift,
+and the string form renders it as ``null`` (Scala's ``mkString``).
 
 ``rules`` is any iterable of rows or mappings with ``antecedent``,
 ``consequent`` (a one-item list) and ``lift``, e.g. ``rules_df.collect()``.
 """
 
 from __future__ import annotations
+
+from collections import Counter
+from itertools import combinations
+
+
+def frequent_itemsets(baskets, min_count: int) -> dict[tuple, int]:
+    """{sorted itemset tuple: frequency} over the non-empty subsets of
+    each basket's distinct items that reach ``min_count``."""
+    counts = Counter(
+        combo
+        for items in (sorted(set(basket)) for basket in baskets)
+        for k in range(1, len(items) + 1)
+        for combo in combinations(items, k)
+    )
+    return {items: n for items, n in counts.items() if n >= min_count}
 
 
 def predict_items(rules, basket) -> list | None:
@@ -22,7 +44,7 @@ def predict_items(rules, basket) -> list | None:
             (float("-inf") if r["lift"] is None else r["lift"], r["consequent"][0], r["antecedent"])
             for r in rules
         ),
-        key=lambda t: (-t[0], t[1]),
+        key=lambda t: (-t[0], t[1] is not None, t[1]),
     )
     owned = set(basket)
     out: list = []
@@ -34,4 +56,4 @@ def predict_items(rules, basket) -> list | None:
 
 def predict(rules, basket) -> str | None:
     items = predict_items(rules, basket)
-    return None if items is None else ", ".join(items)
+    return None if items is None else ", ".join("null" if i is None else i for i in items)

@@ -79,6 +79,8 @@ def test_freq_items_ignores_null_baskets(spark):
         # N = 5: ceil(0.4 * 5) = 2 keeps count 2; ceil(0.41 * 5) = 3 does not
         (0.4, {("x",): 5, ("b",): 3, ("a",): 2, ("b", "x"): 3, ("a", "x"): 2}),
         (0.41, {("x",): 5, ("b",): 3, ("b", "x"): 3}),
+        # min_count = 0: every itemset that occurs
+        (0.0, {("x",): 5, ("b",): 3, ("a",): 2, ("b", "x"): 3, ("a", "x"): 2}),
     ],
 )
 def test_min_support_boundaries(spark, kernel, min_support, want):

@@ -1,13 +1,19 @@
 """Cross-kernel agreement: the self-contained pandas PFP kernel must mine
 exactly the same itemsets as MLlib's JVM kernel (the reference's upstream),
-with both balanced (EPFP) and hash (PFP) group assignment."""
+with both balanced (EPFP) and hash (PFP) group assignment. Its group miner
+is also checked against the pure-Python spec without Spark."""
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
+from fpm_spec import frequent_itemsets
 from optimal_parallel_fp_growth_spark import FPGrowth
+from optimal_parallel_fp_growth_spark.operators import pfp_kernel
 from optimal_parallel_fp_growth_spark.operators.balanced import (
     balanced_group_assignment,
     hash_group_assignment,
@@ -155,3 +161,54 @@ def test_balanced_is_more_balanced_than_hash():
         hw[grp] += math.log(r + 2)
     spread_hash = max(hw) - min(hw)
     assert spread_balanced <= spread_hash
+
+
+NUM_RANKS = 12
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    db=st.lists(
+        st.tuples(
+            st.sets(st.integers(0, NUM_RANKS - 1), min_size=1).map(lambda t: tuple(sorted(t))),
+            st.integers(1, 3),
+        ),
+        max_size=40,
+    ),
+    min_count=st.integers(1, 6),
+    group_of=st.lists(st.integers(0, 3), min_size=NUM_RANKS, max_size=NUM_RANKS),
+)
+def test_projection_mining_matches_spec(db, min_count, group_of):
+    """Without Spark: ``_mine`` over a conditional DB equals the spec's
+    brute force, and mining each group's PFP conditional DB (the prefix
+    up to the group's last rank of every transaction) for the ranks it
+    owns finds every itemset exactly once."""
+    want = frequent_itemsets([t for t, cnt in db for _ in range(cnt)], min_count)
+
+    def mined(db, owns):
+        out = []
+        pfp_kernel._mine(db, (), min_count, owns, out)
+        return [(tuple(sorted(p)), n) for p, n in out]
+
+    got = mined(db, None)
+    assert len(got) == len(dict(got)) and dict(got) == want
+
+    union = []
+    for g in set(group_of):
+        cond = []
+        for ranks, cnt in db:
+            owned = [i for i, r in enumerate(ranks) if group_of[r] == g]
+            if owned:
+                cond.append((ranks[: owned[-1] + 1], cnt))
+        union += mined(cond, lambda r, g=g: group_of[r] == g)
+    assert len(union) == len(dict(union)) and dict(union) == want
+
+
+def test_heavy_group_fails_with_advice(spark, fpm_train, monkeypatch):
+    monkeypatch.setattr(pfp_kernel, "_MAX_GROUP_ROWS", 1)
+    est = FPGrowth(min_support=0.4, kernel="pandas", num_partitions=1)
+    with pytest.raises(PythonException) as info:
+        est.fit(fpm_train)
+    message = str(info.value)
+    for advice in ("num_partitions", "min_support", "kernel='mllib'"):
+        assert advice in message, message

@@ -1,19 +1,18 @@
 """Property-based differential test: on random small transaction sets,
-both kernels must equal a brute-force itemset enumeration (the pandas
-kernel under every group assignment and group count), predictions must
-equal the pure-Python spec, and rules must satisfy their defining
+both kernels must equal the spec's brute-force itemset enumeration (the
+pandas kernel under every group assignment and group count), predictions
+must equal the pure-Python spec, and rules must satisfy their defining
 identities."""
 
 from __future__ import annotations
 
 import math
-from itertools import combinations
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from fpm_spec import predict
+from fpm_spec import frequent_itemsets, predict
 
 pytestmark = pytest.mark.fpm
 
@@ -24,18 +23,6 @@ baskets_strategy = st.lists(
     min_size=1,
     max_size=12,
 )
-
-
-def brute_force(baskets: list[list[str]], min_support: float) -> dict[tuple, int]:
-    n = len(baskets)
-    min_count = math.ceil(min_support * n)
-    out: dict[tuple, int] = {}
-    for k in range(1, len(ALPHABET) + 1):
-        for combo in combinations(ALPHABET, k):
-            cnt = sum(1 for b in baskets if set(combo) <= set(b))
-            if cnt >= min_count:
-                out[combo] = cnt
-    return out
 
 
 @settings(
@@ -53,7 +40,7 @@ def test_both_kernels_match_brute_force(spark, baskets, min_support, balanced, n
     from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 
     tx = spark.createDataFrame([(b,) for b in baskets], "items array<string>")
-    want = brute_force(baskets, min_support)
+    want = frequent_itemsets(baskets, math.ceil(min_support * len(baskets)))
     probes = spark.createDataFrame(
         list(enumerate([*baskets, None])), "id long, items array<string>"
     )
