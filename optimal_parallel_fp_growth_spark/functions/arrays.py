@@ -1,36 +1,13 @@
 """Array/set predicates used by the mining operators.
 
-All are built-in-function compositions (JVM-side, whole-stage codegen) —
-no Python UDFs in these hot paths.
+Both are built-in-function compositions (JVM-side, whole-stage codegen) —
+no Python UDFs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def array_has(arr: Column | str, item: Column | str) -> Column:
-    """Null-safe ``item ∈ arr``: a null item matches a null element, and
-    a null element never hides a non-null item (``array_contains`` alone
-    answers null there). False when ``arr`` is null and ``item`` is not."""
-    arr, item = _col(arr), _col(item)
-    return F.coalesce(
-        F.array_contains(arr, item),
-        item.isNull() & F.exists(arr, lambda e: e.isNull()),
-    )
-
-
-def array_subset_of(subset: Column | str, superset: Column | str) -> Column:
-    """``subset ⊆ superset`` — the reference's rule-applicability predicate
-    (``_._1.forall(itemset.contains)``, epfp/FPGrowth.scala:143), with
-    null-safe membership (``array_has``)."""
-    superset = _col(superset)
-    return F.forall(_col(subset), lambda x: array_has(superset, x))
 
 
 def has_duplicate_items(items: Column | str) -> Column:

@@ -26,7 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from optimal_parallel_fp_growth_spark.operators.rules import association_rules
-from optimal_parallel_fp_growth_spark.operators.transform import transform_with_rules
+from optimal_parallel_fp_growth_spark.operators.transform import (
+    release_rule_index,
+    transform_with_rules,
+)
 
 
 class FPGrowthModel:
@@ -76,11 +79,13 @@ class FPGrowthModel:
 
     def unpersist(self) -> None:
         """Release everything this model pinned in executor storage —
-        the frequent-itemsets DataFrame (persisted by fit()) and every
-        memoized rules DataFrame. Call when done with the model in a
-        long-lived session; without it, Spark's LRU eviction is the
-        only cleanup."""
+        the frequent-itemsets DataFrame (persisted by fit()), every
+        memoized rules DataFrame and the broadcast rule index compiled
+        for each. Call when done with the model in a long-lived session;
+        without it, Spark's LRU eviction is the only cleanup. Outputs of
+        ``transform`` built before this call need a new ``transform``."""
         for df in self._rules_cache.values():
+            release_rule_index(df)
             df.unpersist()
         self._rules_cache.clear()
         self.freq_itemsets.unpersist()
@@ -135,8 +140,8 @@ class FPGrowth:
         self.balanced = balanced
         # The reference validates uniqueness unconditionally inside item
         # counting (epfp/FPGrowthCore.scala:77-81); we make the check
-        # opt-in because it costs one extra pass over the input, which a
-        # caller who already array_distinct'ed their baskets shouldn't pay.
+        # opt-in because it costs one extra pass over the input; without
+        # it, fit() deduplicates each basket instead of raising.
         self.validate_unique = validate_unique
 
     def min_count(self, n: int) -> int:
@@ -145,19 +150,24 @@ class FPGrowth:
 
     def fit(self, dataset: DataFrame) -> FPGrowthModel:
         """Mine frequent itemsets (epfp/FPGrowth.scala:55-80 lifecycle):
-        project the items column, drop null baskets, count N, mine."""
+        project the items column, drop null baskets, count N, mine.
+
+        A basket is a set: repeated items count once, on both kernels
+        (MLlib alone would raise), unless ``validate_unique`` asks for
+        the reference's error."""
         items = (
             dataset.select(F.col(self.items_col).alias("items"))
             .where(F.col("items").isNotNull())
         )
+        if self.validate_unique:
+            from optimal_parallel_fp_growth_spark.functions.arrays import (
+                validate_unique_items,
+            )
+
+            validate_unique_items(items, "items")
+        items = items.select(F.array_distinct("items").alias("items"))
         items.persist()
         try:
-            if self.validate_unique:
-                from optimal_parallel_fp_growth_spark.functions.arrays import (
-                    validate_unique_items,
-                )
-
-                validate_unique_items(items, "items")
             n = items.count()
             if self.kernel == "mllib":
                 freq = self._fit_mllib(items)

@@ -91,3 +91,15 @@ def test_min_support_boundaries(spark, kernel, min_support, want):
     model = FPGrowth(min_support=min_support, kernel=kernel).fit(tx)
     got = {tuple(sorted(r["items"])): r.freq for r in model.freq_itemsets.collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("kernel", ["mllib", "pandas"])
+def test_repeated_item_counts_once(spark, kernel):
+    """A basket is a set: both kernels mine ``[a, a, b]`` as ``[a, b]``."""
+    from fpm_spec import frequent_itemsets
+
+    baskets = [["a", "a", "b"], ["a", "b"], ["b"]]
+    tx = spark.createDataFrame([(b,) for b in baskets], "items array<string>")
+    model = FPGrowth(min_support=0.5, kernel=kernel).fit(tx)
+    got = {tuple(sorted(r["items"])): r.freq for r in model.freq_itemsets.collect()}
+    assert got == frequent_itemsets(baskets, 2) == {("a",): 2, ("a", "b"): 2, ("b",): 3}

@@ -6,8 +6,11 @@ baskets."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from fpm_spec import predict, predict_items
+from optimal_parallel_fp_growth_spark.operators import transform as transform_mod
 from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 from optimal_parallel_fp_growth_spark.operators.transform import transform_with_rules
 from optimal_parallel_fp_growth_spark.plans.transactions import (
@@ -102,6 +105,23 @@ def test_int_baskets_keep_element_type(spark):
     assert got == want
 
 
+_ITEMS = st.sampled_from(["a", "b", "c", "d", None])
+_RULES = st.lists(st.fixed_dictionaries({
+    "antecedent": st.lists(_ITEMS, max_size=3, unique=True),
+    "consequent": st.lists(_ITEMS, min_size=1, max_size=1),
+    "lift": st.sampled_from([None, 0.5, 1.0, 2.0]),
+}), max_size=12)
+
+
+@settings(max_examples=200, deadline=None)
+@given(rules=_RULES, basket=st.none() | st.lists(_ITEMS, max_size=5))
+def test_rule_index_matches_spec(rules, basket):
+    """The compiled index (rarest-item filing, total order, null items,
+    empty antecedents) answers like the spec, without Spark."""
+    index = transform_mod.compile_rules(rules)
+    assert transform_mod.predict(index, basket) == predict_items(rules, basket)
+
+
 def _plan_nodes(plan):
     """Every physical node reachable through ``children()``; AQE's
     current plan (exchanges included) stands in for the adaptive
@@ -116,15 +136,55 @@ def _plan_nodes(plan):
 
 
 def test_transform_plan_is_one_projection(spark, fpm_train):
-    """Rule application is a per-row projection over the dataset: the
-    rules are packed into one broadcast row, so the dataset side has no
-    exchange and no aggregate, and no hash exchange appears anywhere."""
+    """Rule application is a per-row projection over the dataset: one
+    Python evaluation of the items column and no exchange, aggregate or
+    join anywhere in the plan."""
     model = FPGrowth(min_support=0.4, min_confidence=0.5).fit(fpm_train)
     plan = model.transform(fpm_train)._jdf.queryExecution().executedPlan()
     nodes = list(_plan_nodes(plan))
+    names = [n.nodeName() for n in nodes]
     assert not [n for n in nodes if "hashpartitioning" in n.simpleString(100)]
-    (join,) = [n for n in nodes if n.nodeName() == "BroadcastNestedLoopJoin"]
-    basket_side = [n.nodeName() for n in _plan_nodes(join.left())]
-    assert not [n for n in basket_side if "Exchange" in n or "Aggregate" in n], basket_side
-    rule_side = [n.nodeName() for n in _plan_nodes(join.right())]
-    assert "BroadcastExchange" in rule_side and any("Aggregate" in n for n in rule_side)
+    assert not [n for n in names if "Exchange" in n or "Aggregate" in n or "Join" in n], names
+    assert names.count("ArrowEvalPython") == 1, names
+
+
+def test_extra_columns_pass_through(spark, fpm_train):
+    """Only the items column crosses into Python: map, struct and
+    interval columns (Arrow cannot carry the last) come back unchanged."""
+    model = FPGrowth(min_support=0.4, min_confidence=0.5).fit(fpm_train)
+    df = fpm_train.selectExpr(
+        "tid", "items", "map('k', tid) AS m", "named_struct('x', tid, 'y', items) AS s",
+        "make_interval(0, 1, 0, CAST(tid AS INT), 2, 3, 4.5) AS iv",
+    )
+    out = model.transform(df)
+    assert out.dtypes[: len(df.columns)] == df.dtypes
+    shown = "tid", "m", "s", "CAST(iv AS STRING) AS iv"
+    assert sorted(out.selectExpr(*shown).collect()) == sorted(df.selectExpr(*shown).collect())
+    rule_rows = model.association_rules().collect()
+    want = {r.tid: predict(rule_rows, r["items"]) for r in fpm_train.collect()}
+    assert {r.tid: r.prediction for r in out.select("tid", "prediction").collect()} == want
+
+
+def test_model_unpersist_releases_rule_index(spark, fpm_train):
+    model = FPGrowth(min_support=0.4, min_confidence=0.6).fit(fpm_train)
+    rules = model.association_rules()
+    before = sorted(model.transform(fpm_train).collect())
+    index = transform_mod._INDEXES[rules]
+    model.unpersist()
+    assert rules not in transform_mod._INDEXES
+    assert not index._jbroadcast.isValid()
+    assert sorted(model.transform(fpm_train).collect()) == before
+
+
+def test_rule_index_is_shared(spark, fpm_train, monkeypatch):
+    """model.transform and transform_with_rules over the model's rules
+    compile (and collect) the rules once."""
+    compiled = []
+    compile_rules = transform_mod.compile_rules
+    monkeypatch.setattr(transform_mod, "compile_rules",
+                        lambda rows: compiled.append(rows) or compile_rules(rows))
+    model = FPGrowth(min_support=0.4, min_confidence=0.5).fit(fpm_train)
+    a = model.transform(fpm_train).collect()
+    b = transform_with_rules(fpm_train, model.association_rules()).collect()
+    model.transform(fpm_train, keep_array=False).collect()
+    assert len(compiled) == 1 and sorted(a) == sorted(b)
