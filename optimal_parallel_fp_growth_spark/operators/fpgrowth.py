@@ -16,6 +16,13 @@ with two interchangeable kernels:
 Model outputs are canonicalized (``array_sort(items)``) so the two
 kernels, the DuckDB oracle, and the reference agree modulo emission order
 (SURVEY §7.4).
+
+Mining is the only distributed work of a fit. Like the reference, which
+keeps ``itemSupport`` as a driver map and collects its rules for the
+broadcast (``epfp/FPGrowth.scala:93-127``), ``fit`` collects the
+canonical itemsets once and serves them, and the rules derived from them
+on the driver (operators/rules.py), as local relations: collecting
+either runs no Spark job.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from optimal_parallel_fp_growth_spark.operators.rules import association_rules
+from optimal_parallel_fp_growth_spark.operators.rules import association_rules, local_frame
 from optimal_parallel_fp_growth_spark.operators.transform import (
     release_rule_index,
     transform_with_rules,
@@ -36,8 +43,9 @@ class FPGrowthModel:
     """Fitted model: frequent itemsets + derived rules + transform.
 
     Mirrors ``epfp/FPGrowth.scala:112-165`` (model = itemsets DF +
-    itemSupport + numTrainingRecords); itemSupport stays a DataFrame, not
-    a driver map (100 TB stance, SURVEY §3.1).
+    itemSupport + numTrainingRecords). The itemsets are a local relation
+    on the driver, the reference's driver-side itemSupport; their number
+    is bounded by minSupport, not by the input rows.
     """
 
     def __init__(self, freq_itemsets: DataFrame, num_transactions: int,
@@ -63,7 +71,7 @@ class FPGrowthModel:
         if min_confidence not in self._rules_cache:
             self._rules_cache[min_confidence] = association_rules(
                 self.freq_itemsets, self.num_transactions, min_confidence
-            ).cache()
+            )
         return self._rules_cache[min_confidence]
 
     def transform(self, dataset: DataFrame, min_confidence: float | None = None,
@@ -78,17 +86,15 @@ class FPGrowthModel:
         )
 
     def unpersist(self) -> None:
-        """Release everything this model pinned in executor storage —
-        the frequent-itemsets DataFrame (persisted by fit()), every
-        memoized rules DataFrame and the broadcast rule index compiled
-        for each. Call when done with the model in a long-lived session;
-        without it, Spark's LRU eviction is the only cleanup. Outputs of
-        ``transform`` built before this call need a new ``transform``."""
+        """Destroy the broadcast rule index compiled for each memoized
+        rules DataFrame, and forget those DataFrames. The itemsets and
+        rules are local relations held by the driver, so nothing of the
+        model sits in executor storage. Call when done with the model in
+        a long-lived session. Outputs of ``transform`` built before this
+        call need a new ``transform``."""
         for df in self._rules_cache.values():
             release_rule_index(df)
-            df.unpersist()
         self._rules_cache.clear()
-        self.freq_itemsets.unpersist()
 
     def transform_self(self, min_confidence: float | None = None,
                        keep_array: bool = True) -> DataFrame:
@@ -150,7 +156,8 @@ class FPGrowth:
 
     def fit(self, dataset: DataFrame) -> FPGrowthModel:
         """Mine frequent itemsets (epfp/FPGrowth.scala:55-80 lifecycle):
-        project the items column, drop null baskets, count N, mine.
+        project the items column, drop null baskets, count N, mine, and
+        collect the canonical itemsets once into a local relation.
 
         A basket is a set: repeated items count once, on both kernels
         (MLlib alone would raise), unless ``validate_unique`` asks for
@@ -180,13 +187,15 @@ class FPGrowth:
                     num_partitions=self.num_partitions,
                     balanced=self.balanced,
                 )
-            # Canonical order for cross-kernel/oracle comparability.
-            freq = freq.select(F.array_sort("items").alias("items"), "freq")
-            freq.persist().count()  # materialize before unpersisting input
+            # Canonical order for cross-kernel/oracle comparability: Spark's
+            # array_sort, so every item type orders as Spark orders it
+            # (nulls last). One collect; the rest of the model is local.
+            canon = freq.select(F.array_sort("items").alias("items"), "freq")
+            freq_itemsets = local_frame(dataset.sparkSession, canon.schema, canon.collect())
         finally:
             items.unpersist()
         return FPGrowthModel(
-            freq, n, self.items_col, self.prediction_col, self.min_confidence
+            freq_itemsets, n, self.items_col, self.prediction_col, self.min_confidence
         )
 
     def _fit_mllib(self, items: DataFrame) -> DataFrame:

@@ -1,27 +1,73 @@
-"""Association-rule generation as pure DataFrame operations.
+"""Association-rule generation on the driver, from the collected itemsets.
 
 Reproduces ``epfp/AssociationRules.scala:58-82`` +
-``epfp/FPGrowth.scala:169-193`` declaratively:
+``epfp/FPGrowth.scala:169-193``, which build the rules from a driver-side
+``itemSupport`` map:
 
-1. every frequent itemset of size ≥ 2 explodes into single-consequent
-   candidates ``(antecedent = items − item, consequent = [item])``
-   (``items.partition(_ == item)``, AssociationRules.scala:61-70);
-2. candidates equi-join the itemset table on the antecedent array to get
-   the antecedent frequency (AssociationRules.scala:73);
-3. ``confidence = freq(a∪c)/freq(a)`` filtered at minConfidence
-   (AssociationRules.scala:81), ``lift = confidence / support(c)``
-   (nullable, AssociationRules.scala:114), ``support = freq(a∪c)/N``
-   (FPGrowth.scala:182).
+1. every frequent itemset of size ≥ 2 yields one single-consequent
+   candidate per position: ``antecedent = items`` without that position,
+   ``consequent = [item]`` (``items.partition(_ == item)``,
+   AssociationRules.scala:61-70); dropping a position of a sorted itemset
+   leaves it sorted, and a null item is dropped like any other;
+2. the antecedent's frequency is looked up in the itemset map; a
+   candidate whose antecedent is not an itemset is dropped
+   (AssociationRules.scala:73);
+3. ``confidence = freq(a∪c)/freq(a)`` kept at ``>= minConfidence``
+   (AssociationRules.scala:81), ``lift = confidence / support(c)``, null
+   when the consequent singleton is not an itemset
+   (AssociationRules.scala:114, ``r.lift.orNull``), and
+   ``support = freq(a∪c)/N`` (FPGrowth.scala:182). These are the IEEE
+   operations, in the order, of the Spark expression they replace, so
+   every value is bit-identical to it.
 
-Scale: both joins key on the *frequent itemset table*, whose size is
-bounded by minSupport, not by input rows — at 100 TB input this is a
-dim-table join; Catalyst/AQE broadcast it. No collect() anywhere.
+The rules come back as a local relation (``local_frame``): collecting it
+runs no Spark job. Scale: the work and the driver memory are linear in
+the number of frequent itemsets, which minSupport bounds, not the input
+rows; ``transform`` already collects every rule into its index.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+
+def local_frame(spark, schema: StructType, rows: list) -> DataFrame:
+    """A DataFrame over ``rows`` (tuples in the field order of
+    ``schema``), built from an Arrow table typed by ``schema``. Under
+    ``spark.sql.execution.arrow.localRelationThreshold`` it is a
+    ``LocalRelation``, whose ``collect()`` runs no job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def derive_rules(itemsets, num_transactions: int, min_confidence: float) -> list[tuple]:
+    """``(antecedent, consequent, confidence, lift, support)`` tuples
+    from ``(items, freq)`` pairs whose items are canonically sorted."""
+    freq = {tuple(items): f for items, f in itemsets}
+    n = float(num_transactions)
+    out = []
+    for items, f in freq.items():
+        if len(items) < 2:
+            continue
+        for i, item in enumerate(items):
+            antecedent = items[:i] + items[i + 1:]
+            fa = freq.get(antecedent)
+            if fa is None:
+                continue
+            confidence = f / fa
+            if confidence >= min_confidence:
+                fc = freq.get((item,))
+                lift = None if fc is None else confidence / (fc / n)
+                out.append((list(antecedent), [item], confidence, lift, f / n))
+    return out
 
 
 def association_rules(
@@ -30,61 +76,22 @@ def association_rules(
     min_confidence: float = 0.8,
 ) -> DataFrame:
     """freq_itemsets: (items: array sorted canonically, freq: long) →
-    (antecedent, consequent, confidence, lift, support).
+    (antecedent, consequent, confidence, lift, support), a local relation.
 
     Items arrays MUST be canonically sorted (array_sort) on input: the
-    antecedent equi-join compares arrays by value, and dropping one
-    position of a sorted array leaves it sorted, so no re-sort is needed
-    at join time.
+    antecedent is looked up by value, and dropping one position of a
+    sorted array leaves it sorted. The input is collected once; for the
+    model's itemsets, a local relation, that runs no job.
     """
     if not 0.0 <= min_confidence <= 1.0:
         raise ValueError(f"minConfidence must be in [0,1] but got {min_confidence}")
 
     itemsets = freq_itemsets.select("items", "freq")
-
-    # (1) candidate generation: one row per (itemset, member position).
-    # The antecedent drops the consequent by position, so a null item is
-    # removed like any other (array_remove(items, null) would be null).
-    candidates = (
-        itemsets.where(F.size("items") >= 2)
-        .select(
-            F.col("items"),
-            F.col("freq").alias("freq_union"),
-            F.posexplode("items").alias("pos", "item"),
-        )
-        .select(
-            F.filter("items", lambda _, i: i != F.col("pos")).alias("antecedent"),
-            F.array(F.col("item")).alias("consequent"),
-            F.col("freq_union"),
-        )
-    )
-
-    # (2) antecedent frequency via array-keyed equi-join
-    antecedent_freq = itemsets.select(
-        F.col("items").alias("antecedent"), F.col("freq").alias("freq_antecedent")
-    )
-    joined = candidates.join(antecedent_freq, on="antecedent", how="inner")
-
-    # (3) consequent support for lift — left join so unknown consequents
-    # yield null lift (parity with r.lift.orNull, FPGrowth.scala:181). The
-    # key is the one-item array: array keys match null elements, a scalar
-    # null key matches nothing.
-    consequent_support = (
-        itemsets.where(F.size("items") == 1)
-        .select(
-            F.col("items").alias("consequent"),
-            (F.col("freq") / F.lit(float(num_transactions))).alias("support_consequent"),
-        )
-    )
-    rules = (
-        joined.join(F.broadcast(consequent_support), on="consequent", how="left")
-        .select(
-            "antecedent",
-            "consequent",
-            (F.col("freq_union") / F.col("freq_antecedent")).alias("confidence"),
-            (F.col("freq_union") / F.col("freq_antecedent") / F.col("support_consequent")).alias("lift"),
-            (F.col("freq_union") / F.lit(float(num_transactions))).alias("support"),
-        )
-        .where(F.col("confidence") >= F.lit(min_confidence))
-    )
-    return rules
+    items_field = itemsets.schema["items"]
+    rules = derive_rules(itemsets.collect(), num_transactions, min_confidence)
+    schema = StructType([
+        StructField("antecedent", items_field.dataType, items_field.nullable),
+        StructField("consequent", items_field.dataType, False),
+        *(StructField(c, DoubleType()) for c in ("confidence", "lift", "support")),
+    ])
+    return local_frame(freq_itemsets.sparkSession, schema, rules)

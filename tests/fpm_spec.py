@@ -1,9 +1,18 @@
-"""Pure-Python specification of the FPM semantics: frequent itemsets and
-rule application (``model.transform``).
+"""Pure-Python specification of the FPM semantics: frequent itemsets,
+association rules and rule application (``model.transform``).
 
 Frequent itemsets: every itemset that occurs in at least ``min_count``
 baskets, with that count as its frequency, found by brute-force
 enumeration of each basket's subsets.
+
+Association rules: one rule per pair of itemsets ``(union, antecedent)``
+where the antecedent is the union less one item, the consequent. From
+the frequencies ``f`` of the union and ``fa`` of the antecedent and the
+basket count ``n``: ``confidence = f / fa``, kept when at least
+``min_confidence``; ``lift = confidence / (fc / n)`` with ``fc`` the
+consequent singleton's frequency, or ``None`` when that singleton is not
+an itemset; ``support = f / n``. The table need not be downward-closed:
+a union whose antecedent is absent gives no rule.
 
 Rule application: every rule whose antecedent is a subset of the basket
 contributes its consequent. Rules are taken in order of lift descending,
@@ -34,6 +43,25 @@ def frequent_itemsets(baskets, min_count: int) -> dict[tuple, int]:
         for combo in combinations(items, k)
     )
     return {items: n for items, n in counts.items() if n >= min_count}
+
+
+def association_rules(itemsets, n: int, min_confidence: float) -> list[tuple]:
+    """``(antecedent, consequent, confidence, lift, support)`` tuples,
+    antecedent and consequent as tuples, from ``{itemset tuple: freq}``;
+    every (itemset, consequent) pair is tried against every itemset."""
+    out = []
+    for union, f in itemsets.items():
+        for antecedent, fa in itemsets.items():
+            if len(antecedent) + 1 != len(union) or not set(antecedent) < set(union):
+                continue
+            (consequent,) = set(union) - set(antecedent)
+            confidence = f / fa
+            if confidence < min_confidence:
+                continue
+            fc = itemsets.get((consequent,))
+            lift = None if fc is None else confidence / (fc / n)
+            out.append((antecedent, (consequent,), confidence, lift, f / n))
+    return out
 
 
 def predict_items(rules, basket) -> list | None:

@@ -143,14 +143,20 @@ def test_release_covers_pagerank_blocks(spark, sf_small):
 
 
 @pytest.mark.fpm
-def test_model_unpersist_releases_rules_and_itemsets(fpm_train):
+def test_model_unpersist_releases_rules_and_itemsets(spark, fpm_train):
+    """The itemsets and rules are local relations on the driver: fit,
+    rules, transform and unpersist leave no persistent RDD behind."""
+    from optimal_parallel_fp_growth_spark.functions.caching import persistent_rdd_ids
+
+    baseline = persistent_rdd_ids(spark)
     model = FPGrowth(min_support=0.4, min_confidence=0.6).fit(fpm_train)
     rules = model.association_rules()
     rules.count()
-    assert model.freq_itemsets.storageLevel.useMemory
+    model.transform(fpm_train).collect()
+    assert model.freq_itemsets.isLocal() and rules.isLocal()
     model.unpersist()
-    assert not model.freq_itemsets.storageLevel.useMemory
-    assert not rules.storageLevel.useMemory
+    leaked = persistent_rdd_ids(spark) - baseline
+    assert not leaked, f"leaked persistent RDDs: {leaked}"
 
 
 @pytest.mark.fpm

@@ -1,4 +1,4 @@
-"""Differential: our pure-DataFrame association_rules vs MLlib's own
+"""Differential: our driver-side association_rules vs MLlib's own
 JVM AssociationRules on identical fitted itemsets — an implementation-
 independent oracle for confidence/lift/support."""
 
