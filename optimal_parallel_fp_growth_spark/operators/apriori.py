@@ -11,13 +11,16 @@ documented quirks (SURVEY §3.4):
   (Apriori.scala:125) — confidence divided by the consequent's absolute
   count, an unnormalized lift-like metric.
 
-Plan shape: in-basket pair generation with array higher-order functions
-(``transform``/``slice``/``flatten`` — pure codegen, no row ids, no
-self-join) → explode → partial+final hash agg ≥ floor(s·N) → two
-broadcast joins against the frequent-singleton table for the metric.
-At 100 TB the pair blow-up is size(basket)²/2 rows *map-side*, combined
-by partial aggregation before the one shuffle — strictly less traffic
-than a basket-keyed self-join.
+Plan shape: each basket is deduplicated and sorted once
+(``array_sort(array_distinct(items))``, as ``FPGrowth.fit`` counts a
+repeated item once); in-basket pair generation pairs its items in
+position order with array higher-order functions (``transform``/
+``slice``/``flatten`` — pure codegen, no row ids, no self-join) →
+explode → partial+final hash agg ≥ floor(s·N) → two null-safe broadcast
+joins against the frequent-singleton table for the metric. A null
+element is an item like any other. At 100 TB the pair blow-up is
+size(basket)²/2 rows *map-side*, combined by partial aggregation before
+the one shuffle — strictly less traffic than a basket-keyed self-join.
 """
 
 from __future__ import annotations
@@ -36,9 +39,9 @@ def apriori_one_to_one_rules(
 ) -> DataFrame:
     """→ (antecedent: string, consequent: string, confidence, score)
     where score is the reference's confidence/rawCount quirk metric."""
-    tx = transactions.select(F.col(items_col).alias("items")).where(
-        F.col("items").isNotNull()
-    )
+    tx = transactions.select(
+        F.array_sort(F.array_distinct(items_col)).alias("items")
+    ).where(F.col("items").isNotNull())
     # N counts real baskets only, as FPGrowth.fit does: null rows must not
     # inflate floor(s·N)
     min_count = int(math.floor(min_support * tx.count()))
@@ -51,11 +54,13 @@ def apriori_one_to_one_rules(
     )
 
     # all unordered in-basket pairs, generated array-side (codegen):
-    # for each position i, pair items[i] with every later element
+    # for each position i, pair items[i] with every later element. The
+    # basket is sorted, so each pair comes in one order; least/greatest
+    # would skip a null element and pair an item with itself.
     pair_expr = F.expr(
         "flatten(transform(items, (x, i) -> "
         "transform(slice(items, i + 2, size(items) - i - 1), y -> "
-        "struct(least(x, y) AS ia, greatest(x, y) AS ib))))"
+        "struct(x AS ia, y AS ib))))"
     )
     pairs = (
         tx.select(F.explode(pair_expr).alias("pr"))
@@ -73,11 +78,12 @@ def apriori_one_to_one_rules(
         )
     )
 
-    sa = singles.select(F.col("item").alias("antecedent"), F.col("freq").alias("freq_a"))
-    sc_ = singles.select(F.col("item").alias("consequent"), F.col("freq").alias("freq_c"))
+    # null-safe: a null item's rules must find its singleton
+    sa = singles.select(F.col("item").alias("a_item"), F.col("freq").alias("freq_a"))
+    sc_ = singles.select(F.col("item").alias("c_item"), F.col("freq").alias("freq_c"))
     return (
-        directed.join(F.broadcast(sa), "antecedent")
-        .join(F.broadcast(sc_), "consequent")
+        directed.join(F.broadcast(sa), F.col("antecedent").eqNullSafe(F.col("a_item")))
+        .join(F.broadcast(sc_), F.col("consequent").eqNullSafe(F.col("c_item")))
         .select(
             "antecedent",
             "consequent",

@@ -17,21 +17,21 @@ stage 1  frequent items      — explode → hash-agg → HAVING against each
                                FPGrowthCore.scala:86).
 stage 2  conditional DB      — per basket, items → ranks (dictionary
                                encoding, O2) and AT MOST ONE longest
-                               prefix per target group (shuffle-volume
-                               optimization O3, FPGrowthCore.scala:
-                               123-142), via an Arrow-batched
-                               ``mapInPandas``.
-stage 3  combine             — ``groupBy(corpus, group, ranks).count()``:
-                               identical conditional transactions merge
-                               map-side BEFORE the shuffle — recovering
-                               the reference's ``aggregateByKey`` tree
-                               combine (O4) declaratively.
-stage 4  group mining        — ``groupBy(corpus, group).applyInPandas``:
-                               pattern growth by prefix projection over
-                               the group's conditional DB (PrefixFPM),
-                               emitting patterns whose suffix item the
-                               group owns (duplicate suppression O5,
-                               FPTree.scala:85-97), decode ranks → items.
+                               prefix per target group (O3,
+                               FPGrowthCore.scala:123-142), via
+                               ``mapInPandas``; each map task counts
+                               identical (corpus, group, prefix) rows
+                               over all its Arrow batches — the
+                               per-partition combine of the reference's
+                               ``aggregateByKey`` (O4).
+stage 3  group mining        — one shuffle on (corpus, group), then
+                               ``applyInPandas``: merge the equal
+                               prefixes of different map tasks, then
+                               pattern growth by prefix projection
+                               (PrefixFPM), emitting patterns whose
+                               suffix item the group owns (duplicate
+                               suppression O5, FPTree.scala:85-97),
+                               decode ranks → items.
 
 Group assignment uses the EPFP balanced partitioner (O6) by default,
 PFP's hash assignment otherwise — see operators/balanced.py.
@@ -60,6 +60,11 @@ from optimal_parallel_fp_growth_spark.operators.balanced import (
 # more distinct conditional transactions fails loudly with actionable
 # advice instead of OOMing the executor.
 _MAX_GROUP_ROWS = 5_000_000
+
+# Stage 2 flushes a map task's combined rows at this many distinct keys,
+# so its heap stays bounded; the mining group merges what a flush split.
+_COMBINE_KEYS = 1 << 18
+_FRAME_ROWS = 10_000  # rows per frame handed to Arrow
 
 
 def _mine(db, suffix, min_count, owns, out):
@@ -90,6 +95,16 @@ def _mine(db, suffix, min_count, owns, out):
         out.append((pattern, support[r]))
         if proj:
             _mine(list(proj.items()), pattern, min_count, None, out)
+
+
+def _cond_frames(counts: dict) -> Iterator[pd.DataFrame]:
+    """Stage 2's combined ``{(corpus, group, ranks): cnt}`` as frames of at
+    most ``_FRAME_ROWS`` rows."""
+    rows = [(c, g, list(r), n) for (c, g, r), n in counts.items()]
+    for lo in range(0, len(rows), _FRAME_ROWS):
+        yield pd.DataFrame(
+            rows[lo : lo + _FRAME_ROWS], columns=["corpus", "group", "ranks", "cnt"]
+        )
 
 
 def mine_pandas(
@@ -144,7 +159,7 @@ def _mine_by_corpus(
     num_partitions: int | None,
     balanced: bool,
 ) -> DataFrame:
-    """The four PFP stages over (corpus, items), each corpus with its own
+    """The three PFP stages over (corpus, items), each corpus with its own
     threshold ``min_count[corpus]``, rank dictionary and group assignment.
     → (corpus, items, freq). State per applyInPandas call is one
     (corpus, group)'s conditional DB."""
@@ -161,7 +176,7 @@ def _mine_by_corpus(
 
     # stage 1 — per-corpus frequent items; only frequent rows are
     # collected. The thresholds ride in a literal map: a DataFrame of them
-    # would be a LogicalRDD whose broadcast costs a Python job per fit.
+    # would be a LogicalRDD, and joining it costs a Python job per fit.
     thresholds = F.create_map(
         *[
             lit
@@ -200,72 +215,57 @@ def _mine_by_corpus(
             else hash_group_assignment(len(decode), g)
         )
 
-    bc = spark.sparkContext.broadcast((item_to_rank, rank_to_item, assign, min_count))
-
-    # stage 2 — dictionary-encode per corpus; ≤1 longest prefix per group
+    # stage 2 — dictionary-encode per corpus; ≤1 longest prefix per group,
+    # merged with its duplicates across the map task's Arrow batches. The
+    # closures capture the dictionaries: PySpark ships a pickled command
+    # over 1 MB to each executor once, and each task deserializes it.
     def gen_cond(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i2r, _, asg, _ = bc.value
+        counts: dict[tuple, int] = {}
         for pdf in batches:
-            out_c: list = []
-            out_group: list[int] = []
-            out_ranks: list[list[int]] = []
             for corpus, items in zip(pdf["corpus"], pdf["items"]):
-                d = i2r.get(corpus)
+                d = item_to_rank.get(corpus)
                 if d is None:
                     continue
-                group_of = asg[corpus]
+                group_of = assign[corpus]
                 ranks = sorted({d[i] for i in items if i in d})
                 emitted: set[int] = set()
                 for idx in range(len(ranks) - 1, -1, -1):
                     g = group_of[ranks[idx]]
                     if g not in emitted:
                         emitted.add(g)
-                        out_c.append(corpus)
-                        out_group.append(g)
-                        out_ranks.append(ranks[: idx + 1])
-            # Explicit dtypes: an empty batch would otherwise default to
-            # float64 columns, which Arrow cannot convert to int/array.
-            yield pd.DataFrame(
-                {
-                    "corpus": pd.Series(out_c, dtype="object"),
-                    "group": pd.Series(out_group, dtype="int32"),
-                    "ranks": pd.Series(out_ranks, dtype="object"),
-                }
-            )
+                        key = (corpus, g, tuple(ranks[: idx + 1]))
+                        counts[key] = counts.get(key, 0) + 1
+            if len(counts) >= combine_keys:
+                yield from _cond_frames(counts)
+                counts = {}
+        yield from _cond_frames(counts)
 
+    # Bound here so the pickled closures carry the values.
+    combine_keys, max_group_rows = _COMBINE_KEYS, _MAX_GROUP_ROWS
     cond = src.mapInPandas(
-        gen_cond, f"corpus {corpus_dt}, group int, ranks array<int>"
+        gen_cond, f"corpus {corpus_dt}, group int, ranks array<int>, cnt long"
     )
 
-    # stage 3 — merge identical conditional transactions (partial agg
-    # happens map-side, so the shuffle carries combined rows)
-    cond_agg = cond.groupBy("corpus", "group", "ranks").agg(
-        F.count("*").alias("cnt")
-    )
-
-    # Bound here so the pickled closure carries the value.
-    max_group_rows = _MAX_GROUP_ROWS
-
-    # stage 4 — per-(corpus, group) projection mining + rank decode
+    # stage 3 — per-(corpus, group) merge, projection mining, rank decode
     def mine_group(pdf: pd.DataFrame) -> pd.DataFrame:
         corpus = pdf["corpus"].iloc[0]
         group = int(pdf["group"].iloc[0])
-        if len(pdf) > max_group_rows:
+        merged: dict[tuple[int, ...], int] = {}
+        for ranks, cnt in zip(pdf["ranks"], pdf["cnt"]):
+            key = tuple(ranks.tolist())
+            merged[key] = merged.get(key, 0) + cnt
+        if len(merged) > max_group_rows:
             raise RuntimeError(
-                f"mining group {group} of corpus {corpus} has {len(pdf)} "
+                f"mining group {group} of corpus {corpus} has {len(merged)} "
                 f"distinct conditional transactions (> {max_group_rows}); "
                 "raise num_partitions (more, smaller groups), raise "
                 "min_support, or use kernel='mllib' for this scale"
             )
-        _, r2i, asg, mcs = bc.value
-        group_of = asg[corpus]
-        decode = r2i[corpus]
-        db = [
-            (tuple(ranks.tolist()), int(cnt))
-            for ranks, cnt in zip(pdf["ranks"], pdf["cnt"])
-        ]
+        group_of = assign[corpus]
+        decode = rank_to_item[corpus]
         patterns: list[tuple[tuple[int, ...], int]] = []
-        _mine(db, (), mcs[corpus], lambda r: group_of[r] == group, patterns)
+        _mine(list(merged.items()), (), min_count[corpus],
+              lambda r: group_of[r] == group, patterns)
         return pd.DataFrame(
             {
                 "corpus": pd.Series([corpus] * len(patterns), dtype="object"),
@@ -278,15 +278,13 @@ def _mine_by_corpus(
 
     # Pin the mining stage's parallelism. Its shuffle is bytes-tiny
     # (combined conditional transactions), so AQE's bytes-advisory
-    # coalescing packs the COMPUTE-bound Python mining into a
-    # handful of tasks (measured r17: 3 tasks for a 40-group run).
-    # An explicit hash repartition on the group key is exempt from AQE
-    # coalescing and satisfies the groupBy's clustering, so no second
-    # exchange is added; 4× overallocation keeps expected hash-collision
-    # parallelism loss under ~12% (guide §2.5: few distinct keys need
-    # several× more partitions than keys to spread).
+    # coalescing would pack the COMPUTE-bound Python mining into a handful
+    # of tasks (measured r17: 3 tasks for a 40-group run). An explicit hash
+    # repartition on the group key is exempt from AQE coalescing and
+    # satisfies the groupBy's clustering; 4× overallocation keeps expected
+    # hash-collision parallelism loss under ~12% (guide §2.5).
     return (
-        cond_agg.repartition(4 * num_groups, "corpus", "group")
+        cond.repartition(4 * num_groups, "corpus", "group")
         .groupBy("corpus", "group")
         .applyInPandas(mine_group, out_schema)
     )

@@ -61,10 +61,8 @@ def test_matches_brute_force_on_crafted_baskets(spark):
         ["b", "c"],
         ["a", "b", "c", "d"],
         ["d"],
-        # items are unique per basket BY CONTRACT (the engine's
-        # transaction builders array_distinct; the FP-Growth path
-        # validates) — apriori counts occurrences, so a duplicate
-        # would be an input-contract violation, not a supported case
+        # a repeated item counts once per basket, as in FPGrowth.fit
+        # (test_null_and_repeated_items_are_items)
         ["a", "d"],
         ["b"],
     ]
@@ -123,6 +121,24 @@ def test_agrees_with_fpgrowth_on_shared_semantics(spark, sf_small):
     assert set(ap) == set(fp) and len(fp) > 0
     for k, conf in fp.items():
         assert math.isclose(ap[k][0], conf), k
+
+
+def test_null_and_repeated_items_are_items(spark):
+    """A null element is an item and a repeated item counts once: no
+    self-rule a⇒a, and the null item's rules find its singleton count.
+    Distinct baskets {a,null}, {a,null,b}, {a,b}, {null,b} at s=0.5
+    (floor(2) = 2): every pair is seen twice, every item three times."""
+    baskets = [["a", None], ["a", None, "b", "a"], ["a", "b", "b"], [None, "b", None]]
+    df = spark.createDataFrame([(b,) for b in baskets], "items array<string>")
+    got = _collect(apriori_one_to_one_rules(df, min_support=0.5))
+    want = {
+        (x, y): (2 / 3, 2 / 9)
+        for x, y in [("a", "b"), ("a", None), ("b", None)]
+        for x, y in [(x, y), (y, x)]
+    }
+    assert set(got) == set(want), got
+    for k, (conf, score) in want.items():
+        assert math.isclose(got[k][0], conf) and math.isclose(got[k][1], score), k
 
 
 def test_pair_generation_stays_map_side(spark):

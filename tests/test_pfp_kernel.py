@@ -5,6 +5,10 @@ is also checked against the pure-Python spec without Spark."""
 
 from __future__ import annotations
 
+import math
+import re
+from contextlib import contextmanager
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -204,11 +208,121 @@ def test_projection_mining_matches_spec(db, min_count, group_of):
     assert len(union) == len(dict(union)) and dict(union) == want
 
 
+ADVICE = ("num_partitions", "min_support", "kernel='mllib'")
+
+
 def test_heavy_group_fails_with_advice(spark, fpm_train, monkeypatch):
     monkeypatch.setattr(pfp_kernel, "_MAX_GROUP_ROWS", 1)
     est = FPGrowth(min_support=0.4, kernel="pandas", num_partitions=1)
     with pytest.raises(PythonException) as info:
         est.fit(fpm_train)
     message = str(info.value)
-    for advice in ("num_partitions", "min_support", "kernel='mllib'"):
+    for advice in ADVICE:
         assert advice in message, message
+
+
+# One group over identical baskets spread across 3 partitions and 2-row
+# Arrow batches: every partition holds all 4 distinct baskets.
+SPREAD = [["a", "b", "c"], ["a", "b"], ["a", "c", "d"], ["b", "e"]] * 5
+
+
+@contextmanager
+def arrow_batch_rows(spark, rows):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(key, None)
+    spark.conf.set(key, str(rows))
+    try:
+        yield
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
+
+
+def shuffled_rows(df):
+    """Records written to the shuffle of ``df``'s executed plan."""
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            yield from walk(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            yield from walk(node.plan())
+        else:
+            yield node
+            kids = node.children()
+            for i in range(kids.size()):
+                yield from walk(kids.apply(i))
+
+    return sum(
+        int(n.metrics().apply("shuffleRecordsWritten").value())
+        for n in walk(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "Exchange"
+    )
+
+
+def test_map_tasks_combine_across_batches(spark, monkeypatch):
+    """Each map task merges identical conditional transactions over all
+    its Arrow batches, so the one group receives (map tasks × distinct)
+    rows, not one per batch. Flushing after every batch leaves the merge
+    to the group and mines the same itemsets."""
+    def mined(df):
+        return {tuple(sorted(items)): freq for items, freq in as_dict(df).items()}
+
+    min_count = math.ceil(0.2 * len(SPREAD))
+    want = frequent_itemsets(SPREAD, min_count)
+    tx = spark.createDataFrame(
+        spark.sparkContext.parallelize([(b,) for b in SPREAD], 3), "items array<string>"
+    )
+    with arrow_batch_rows(spark, 2):
+        out = pfp_kernel.mine_pandas(tx, min_count, num_partitions=1)
+        assert mined(out) == want
+        assert shuffled_rows(out) == 3 * 4
+        monkeypatch.setattr(pfp_kernel, "_COMBINE_KEYS", 1)
+        out = pfp_kernel.mine_pandas(tx, min_count, num_partitions=1)
+        assert mined(out) == want
+        assert shuffled_rows(out) == len(SPREAD)
+
+
+def test_group_guard_counts_distinct_transactions(spark, monkeypatch):
+    """Equal conditional transactions reach the one group from different
+    map tasks, and the guard counts them once after the group's merge — a
+    bound equal to the distinct count mines, one less fails with the
+    advice."""
+    min_support = 0.2
+    min_count = math.ceil(min_support * len(SPREAD))
+    want = frequent_itemsets(SPREAD, min_count)
+    frequent = {items[0] for items in want if len(items) == 1}
+    distinct = len({frozenset(b) & frequent for b in SPREAD} - {frozenset()})
+    tx = spark.createDataFrame(
+        spark.sparkContext.parallelize([(b,) for b in SPREAD], 3), "items array<string>"
+    )
+    est = FPGrowth(min_support=min_support, kernel="pandas", num_partitions=1)
+    with arrow_batch_rows(spark, 2):
+        monkeypatch.setattr(pfp_kernel, "_MAX_GROUP_ROWS", distinct)
+        assert as_dict(est.fit(tx).freq_itemsets) == want
+        monkeypatch.setattr(pfp_kernel, "_MAX_GROUP_ROWS", distinct - 1)
+        with pytest.raises(PythonException) as info:
+            est.fit(tx)
+    message = str(info.value)
+    assert f"has {distinct} distinct conditional transactions" in message, message
+    for advice in ADVICE:
+        assert advice in message, message
+
+
+def test_mining_plan_has_one_shuffle(spark, fpm_train):
+    """Conditional transactions are merged in the two Python stages, not
+    by a Spark aggregate: between ``gen_cond`` (MapInPandas) and
+    ``mine_group`` (FlatMapGroupsInPandas) the executed plan has exactly
+    one exchange, the repartition on (corpus, group)."""
+    out = pfp_kernel.mine_pandas(fpm_train, 2, num_partitions=2)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    between = final[final.index("FlatMapGroupsInPandas") : final.index("MapInPandas")]
+    exchanges = [line for line in between.splitlines() if "Exchange" in line]
+    assert len(exchanges) == 1, plan
+    assert "REPARTITION_BY_NUM" in exchanges[0], plan
+    assert re.search(r"hashpartitioning\(corpus#\d+, group#\d+, \d+\)", exchanges[0]), plan
+    assert "HashAggregate" not in plan, plan

@@ -35,36 +35,57 @@ baskets_strategy = st.lists(
     min_support=st.sampled_from([0.2, 0.4, 0.6]),
     balanced=st.booleans(),
     num_partitions=st.sampled_from([1, 2, 7, 64]),
+    layout=st.tuples(st.sampled_from([None, 1, 3]), st.sampled_from([None, 2])),
 )
-def test_both_kernels_match_brute_force(spark, baskets, min_support, balanced, num_partitions):
+def test_both_kernels_match_brute_force(
+    spark, baskets, min_support, balanced, num_partitions, layout
+):
+    """``layout`` is the input's partition count (None: a local relation
+    from the plain list) and, when not None, a 2-row Arrow batch:
+    identical conditional transactions then reach a mining group from
+    different batches and map tasks."""
     from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 
-    tx = spark.createDataFrame([(b,) for b in baskets], "items array<string>")
+    input_partitions, batch_rows = layout
+    rows = [(b,) for b in baskets]
+    if input_partitions is not None:
+        rows = spark.sparkContext.parallelize(rows, input_partitions)
+    tx = spark.createDataFrame(rows, "items array<string>")
     want = frequent_itemsets(baskets, math.ceil(min_support * len(baskets)))
     probes = spark.createDataFrame(
         list(enumerate([*baskets, None])), "id long, items array<string>"
     )
-    for kernel in ("mllib", "pandas"):
-        model = FPGrowth(
-            min_support=min_support,
-            min_confidence=0.0,
-            kernel=kernel,
-            balanced=balanced,
-            num_partitions=num_partitions,
-        ).fit(tx)
-        got = {
-            tuple(r["items"]): r["freq"] for r in model.freq_itemsets.collect()
-        }
-        where = (
-            f"kernel={kernel} balanced={balanced} num_partitions={num_partitions} "
-            f"baskets={baskets} s={min_support}"
-        )
-        assert got == want, where
-        rules = model.association_rules().collect()
-        preds = {r["id"]: r["prediction"] for r in model.transform(probes).collect()}
-        assert preds == {
-            i: predict(rules, b) for i, b in enumerate([*baskets, None])
-        }, where
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(key, None)
+    if batch_rows is not None:
+        spark.conf.set(key, str(batch_rows))
+    try:
+        for kernel in ("mllib", "pandas"):
+            model = FPGrowth(
+                min_support=min_support,
+                min_confidence=0.0,
+                kernel=kernel,
+                balanced=balanced,
+                num_partitions=num_partitions,
+            ).fit(tx)
+            got = {
+                tuple(r["items"]): r["freq"] for r in model.freq_itemsets.collect()
+            }
+            where = (
+                f"kernel={kernel} balanced={balanced} num_partitions={num_partitions} "
+                f"layout={layout} baskets={baskets} s={min_support}"
+            )
+            assert got == want, where
+            rules = model.association_rules().collect()
+            preds = {r["id"]: r["prediction"] for r in model.transform(probes).collect()}
+            assert preds == {
+                i: predict(rules, b) for i, b in enumerate([*baskets, None])
+            }, where
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
 
 
 @settings(
