@@ -39,6 +39,11 @@ from optimal_parallel_fp_growth_spark.operators.transform import (
 )
 
 
+def min_count_for(min_support: float, n: int) -> int:
+    """minCount = ceil(minSupport · N) — epfp/FPGrowthCore.scala:54."""
+    return int(math.ceil(min_support * n))
+
+
 class FPGrowthModel:
     """Fitted model: frequent itemsets + derived rules + transform.
 
@@ -151,8 +156,7 @@ class FPGrowth:
         self.validate_unique = validate_unique
 
     def min_count(self, n: int) -> int:
-        """minCount = ceil(minSupport · N) — epfp/FPGrowthCore.scala:54."""
-        return int(math.ceil(self.min_support * n))
+        return min_count_for(self.min_support, n)
 
     def fit(self, dataset: DataFrame) -> FPGrowthModel:
         """Mine frequent itemsets (epfp/FPGrowth.scala:55-80 lifecycle):

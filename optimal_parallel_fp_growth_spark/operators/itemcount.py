@@ -10,8 +10,6 @@ result stays a DataFrame, which is the 100 TB-safe shape.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -25,9 +23,11 @@ def freq_items(
     """(item, freq) for items with freq ≥ ceil(min_support · N),
     frequency-descending (the FP rank order). Null baskets are dropped
     before N is counted, as in ``FPGrowth.fit``."""
+    from optimal_parallel_fp_growth_spark.operators.fpgrowth import min_count_for
+
     transactions = transactions.where(F.col(items_col).isNotNull())
     n = num_transactions if num_transactions is not None else transactions.count()
-    min_count = int(math.ceil(min_support * n))
+    min_count = min_count_for(min_support, n)
     return (
         transactions.select(F.explode(items_col).alias("item"))
         .groupBy("item")

@@ -6,35 +6,12 @@ Re-expresses the reference's PFP/EPFP pipeline (``epfp/FPGrowthCore.scala:
 several independent corpora mine in one pass (:func:`mine_pandas_by`);
 ungrouped mining (:func:`mine_pandas`) is the case of one constant key.
 
-stage 1  frequent items      — explode → hash-agg → HAVING against each
-                               corpus's threshold (Catalyst does
-                               partial+final, i.e. the reference's
-                               map-side-combined ``reduceByKey``); the
-                               surviving (corpus, item) rows are bounded
-                               by minSupport and collected to build the
-                               rank dictionaries on the driver (the
-                               reference does the same,
-                               FPGrowthCore.scala:86).
-stage 2  conditional DB      — per basket, items → ranks (dictionary
-                               encoding, O2) and AT MOST ONE longest
-                               prefix per target group (O3,
-                               FPGrowthCore.scala:123-142), via
-                               ``mapInPandas``; each map task counts
-                               identical (corpus, group, prefix) rows
-                               over all its Arrow batches — the
-                               per-partition combine of the reference's
-                               ``aggregateByKey`` (O4).
-stage 3  group mining        — one shuffle on (corpus, group), then
-                               ``applyInPandas``: merge the equal
-                               prefixes of different map tasks, then
-                               pattern growth by prefix projection
-                               (PrefixFPM), emitting patterns whose
-                               suffix item the group owns (duplicate
-                               suppression O5, FPTree.scala:85-97),
-                               decode ranks → items.
-
-Group assignment uses the EPFP balanced partitioner (O6) by default,
-PFP's hash assignment otherwise — see operators/balanced.py.
+As in the reference, the stages are plain functions that Spark only
+wires together (:func:`_mine_by_corpus`): :func:`build_dictionary` over
+stage 1's collected frequent items (FPGrowthCore.scala:86),
+:func:`cond_transactions` per basket in ``mapInPandas`` (``gen_cond``),
+and :func:`group_patterns` per (corpus, group) in ``applyInPandas``
+(``mine_group``) after the one shuffle.
 
 Scale note: one group's conditional DB and its projections live in one
 Python worker's heap; group count should scale with data
@@ -44,8 +21,8 @@ largest inputs (SURVEY §7.4).
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -67,14 +44,82 @@ _COMBINE_KEYS = 1 << 18
 _FRAME_ROWS = 10_000  # rows per frame handed to Arrow
 
 
+class Dictionary(NamedTuple):
+    """One corpus's stage-1 result. Stage 2 keys items by their Spark string
+    form (None for null): pandas hands an integer array that holds a null
+    over as floats, which lose the null and longs above 2^53."""
+
+    item_to_rank: dict  # string form → rank
+    decode: list  # rank → item, of the input's element type
+    group_of: list  # rank → group
+    min_count: int
+
+
+def build_dictionary(
+    rows: Iterable[tuple], min_count: int, num_groups: int, balanced: bool
+) -> Dictionary:
+    """Stage 1: ``rows`` are one corpus's frequent ``(item, string form,
+    freq)``. Ranks go by freq desc, then item asc, a null item first as
+    Spark orders nulls. At most ``num_groups`` groups, and no more than
+    the items; EPFP's balanced assignment (O6) or PFP's hash assignment,
+    see operators/balanced.py."""
+    rows = sorted(rows, key=lambda r: (-r[2], r[0] is not None, r[0]))
+    assign = balanced_group_assignment if balanced else hash_group_assignment
+    return Dictionary(
+        {key: rank for rank, (_, key, _) in enumerate(rows)},
+        [item for item, _, _ in rows],
+        assign(len(rows), max(1, min(num_groups, len(rows)))),
+        min_count,
+    )
+
+
+def cond_transactions(items: Iterable, dictionary: Dictionary) -> Iterator[tuple]:
+    """Stage 2, one basket of string forms → its conditional transactions
+    ``(group, ranks)``: the frequent items as ascending ranks (dictionary
+    encoding, O2), cut after each group's last rank, so at most one
+    longest prefix per group (O3, FPGrowthCore.scala:123-142)."""
+    d, group_of = dictionary.item_to_rank, dictionary.group_of
+    ranks = sorted({d[i] for i in items if i in d})
+    emitted: set[int] = set()
+    for idx in range(len(ranks) - 1, -1, -1):
+        g = group_of[ranks[idx]]
+        if g not in emitted:
+            emitted.add(g)
+            yield g, tuple(ranks[: idx + 1])
+
+
+def group_patterns(
+    rows: Iterable[tuple], dictionary: Dictionary, corpus, group: int, max_rows: int
+) -> list[tuple[list, int]]:
+    """Stage 3, one group's ``(ranks, cnt)`` rows → ``[(items, freq)]``:
+    merges equal ranks (rows from different map tasks, or one task's
+    flushes), fails with advice past ``max_rows`` distinct ones, and
+    mines the patterns whose last rank the group owns (duplicate
+    suppression O5, FPTree.scala:85-97), decoded to items."""
+    merged: dict[tuple[int, ...], int] = {}
+    for ranks, cnt in rows:
+        merged[ranks] = merged.get(ranks, 0) + cnt
+    if len(merged) > max_rows:
+        raise RuntimeError(
+            f"mining group {group} of corpus {corpus} has {len(merged)} "
+            f"distinct conditional transactions (> {max_rows}); "
+            "raise num_partitions (more, smaller groups), raise "
+            "min_support, or use kernel='mllib' for this scale"
+        )
+    group_of, decode = dictionary.group_of, dictionary.decode
+    patterns: list[tuple[tuple[int, ...], int]] = []
+    _mine(list(merged.items()), (), dictionary.min_count,
+          lambda r: group_of[r] == group, patterns)
+    return [([decode[r] for r in pat], supp) for pat, supp in patterns]
+
+
 def _mine(db, suffix, min_count, owns, out):
     """Pattern growth by prefix projection. ``db`` is a list of (ranks
     tuple ascending, count); ranks are ints, frequency-descending. Every
     frequent rank r extends ``suffix`` and is mined again over its
     projection: the prefix before r of every transaction holding r, with
-    identical prefixes merged. ``owns`` filters r at the top level only
-    (duplicate suppression O5, FPTree.scala:85-97); None emits every
-    frequent rank."""
+    identical prefixes merged. ``owns`` filters r at the top level only;
+    None emits every frequent rank."""
     support: dict[int, int] = {}
     for ranks, cnt in db:
         for r in ranks:
@@ -134,16 +179,17 @@ def mine_pandas_by(
     freq ≥ ceil(min_support · |corpus|) within each corpus. Rows with a
     null basket or a null corpus key are dropped before corpus sizes are
     counted, as ``FPGrowth.fit`` excludes null baskets from N."""
+    from optimal_parallel_fp_growth_spark.operators.fpgrowth import min_count_for
+
     if not 0.0 < min_support <= 1.0:
         raise ValueError(f"min_support must be in (0, 1], got {min_support}")
     src = _keyed(items_df, F.col(corpus_col))
     min_count = {
-        r["corpus"]: max(1, math.ceil(min_support * r["n"]))
+        r["corpus"]: min_count_for(min_support, r["n"])
         for r in src.groupBy("corpus").agg(F.count("*").alias("n")).collect()
     }
-    return _mine_by_corpus(
-        src, min_count, num_partitions, balanced
-    ).withColumnRenamed("corpus", corpus_col)
+    out = _mine_by_corpus(src, min_count, num_partitions, balanced)
+    return out.withColumnRenamed("corpus", corpus_col)
 
 
 def _keyed(items_df: DataFrame, corpus: Column) -> DataFrame:
@@ -154,15 +200,11 @@ def _keyed(items_df: DataFrame, corpus: Column) -> DataFrame:
 
 
 def _mine_by_corpus(
-    src: DataFrame,
-    min_count: dict,
-    num_partitions: int | None,
-    balanced: bool,
+    src: DataFrame, min_count: dict, num_partitions: int | None, balanced: bool
 ) -> DataFrame:
     """The three PFP stages over (corpus, items), each corpus with its own
-    threshold ``min_count[corpus]``, rank dictionary and group assignment.
-    → (corpus, items, freq). State per applyInPandas call is one
-    (corpus, group)'s conditional DB."""
+    threshold ``min_count[corpus]`` and :class:`Dictionary`.
+    → (corpus, items, freq)."""
     spark = src.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
@@ -177,111 +219,69 @@ def _mine_by_corpus(
     # stage 1 — per-corpus frequent items; only frequent rows are
     # collected. The thresholds ride in a literal map: a DataFrame of them
     # would be a LogicalRDD, and joining it costs a Python job per fit.
-    thresholds = F.create_map(
-        *[
-            lit
-            for c, m in min_count.items()
-            for lit in (F.lit(c).cast(corpus_dt), F.lit(m).cast("long"))
-        ]
-    )
+    thresholds = F.create_map(*[
+        lit for c, m in min_count.items()
+        for lit in (F.lit(c).cast(corpus_dt), F.lit(m).cast("long"))
+    ])
     freq_rows = (
         src.select("corpus", F.explode("items").alias("item"))
         .groupBy("corpus", "item")
         .agg(F.count("*").alias("freq"))
         .where(F.col("freq") >= thresholds[F.col("corpus")])
+        .select("corpus", "item", F.col("item").cast("string").alias("key"), "freq")
         .collect()
     )
     if not freq_rows:
         return spark.createDataFrame([], out_schema)
     per_corpus: dict = {}
-    for r in freq_rows:
-        per_corpus.setdefault(r["corpus"], []).append((r["item"], r["freq"]))
-    item_to_rank: dict = {}
-    rank_to_item: dict = {}
-    assign: dict = {}
-    num_groups = 0
-    for c, pairs in per_corpus.items():
-        # rank dictionary: freq desc, item asc (a null item first, as
-        # Spark orders nulls)
-        pairs.sort(key=lambda p: (-p[1], p[0] is not None, p[0]))
-        decode = [it for it, _ in pairs]
-        rank_to_item[c] = decode
-        item_to_rank[c] = {it: r for r, it in enumerate(decode)}
-        g = max(1, min(num_partitions, len(decode)))
-        num_groups += g
-        assign[c] = (
-            balanced_group_assignment(len(decode), g)
-            if balanced
-            else hash_group_assignment(len(decode), g)
-        )
+    for corpus, item, key, freq in freq_rows:
+        per_corpus.setdefault(corpus, []).append((item, key, freq))
+    dictionaries = {c: build_dictionary(rows, min_count[c], num_partitions, balanced)
+                    for c, rows in per_corpus.items()}
+    num_groups = sum(len(set(d.group_of)) for d in dictionaries.values())
 
-    # stage 2 — dictionary-encode per corpus; ≤1 longest prefix per group,
-    # merged with its duplicates across the map task's Arrow batches. The
-    # closures capture the dictionaries: PySpark ships a pickled command
-    # over 1 MB to each executor once, and each task deserializes it.
+    # The adapters only move pandas rows in and out of the stages. They
+    # capture the dictionaries (PySpark ships a pickled command over 1 MB
+    # to each executor once; each task deserializes it) and these bounds.
+    combine_keys, max_group_rows = _COMBINE_KEYS, _MAX_GROUP_ROWS
+
+    # stage 2 — a map task combines identical (corpus, group, ranks) rows
+    # over all its Arrow batches, like ``aggregateByKey`` (O4).
     def gen_cond(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counts: dict[tuple, int] = {}
         for pdf in batches:
             for corpus, items in zip(pdf["corpus"], pdf["items"]):
-                d = item_to_rank.get(corpus)
+                d = dictionaries.get(corpus)
                 if d is None:
                     continue
-                group_of = assign[corpus]
-                ranks = sorted({d[i] for i in items if i in d})
-                emitted: set[int] = set()
-                for idx in range(len(ranks) - 1, -1, -1):
-                    g = group_of[ranks[idx]]
-                    if g not in emitted:
-                        emitted.add(g)
-                        key = (corpus, g, tuple(ranks[: idx + 1]))
-                        counts[key] = counts.get(key, 0) + 1
+                for g, ranks in cond_transactions(items, d):
+                    key = (corpus, g, ranks)
+                    counts[key] = counts.get(key, 0) + 1
             if len(counts) >= combine_keys:
                 yield from _cond_frames(counts)
                 counts = {}
         yield from _cond_frames(counts)
 
-    # Bound here so the pickled closures carry the values.
-    combine_keys, max_group_rows = _COMBINE_KEYS, _MAX_GROUP_ROWS
-    cond = src.mapInPandas(
+    keys = F.col("items").cast("array<string>").alias("items")
+    cond = src.select("corpus", keys).mapInPandas(
         gen_cond, f"corpus {corpus_dt}, group int, ranks array<int>, cnt long"
     )
 
-    # stage 3 — per-(corpus, group) merge, projection mining, rank decode
+    # stage 3 — one (corpus, group) per call
     def mine_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        corpus = pdf["corpus"].iloc[0]
-        group = int(pdf["group"].iloc[0])
-        merged: dict[tuple[int, ...], int] = {}
-        for ranks, cnt in zip(pdf["ranks"], pdf["cnt"]):
-            key = tuple(ranks.tolist())
-            merged[key] = merged.get(key, 0) + cnt
-        if len(merged) > max_group_rows:
-            raise RuntimeError(
-                f"mining group {group} of corpus {corpus} has {len(merged)} "
-                f"distinct conditional transactions (> {max_group_rows}); "
-                "raise num_partitions (more, smaller groups), raise "
-                "min_support, or use kernel='mllib' for this scale"
-            )
-        group_of = assign[corpus]
-        decode = rank_to_item[corpus]
-        patterns: list[tuple[tuple[int, ...], int]] = []
-        _mine(list(merged.items()), (), min_count[corpus],
-              lambda r: group_of[r] == group, patterns)
-        return pd.DataFrame(
-            {
-                "corpus": pd.Series([corpus] * len(patterns), dtype="object"),
-                "items": pd.Series(
-                    [[decode[r] for r in pat] for pat, _ in patterns], dtype="object"
-                ),
-                "freq": pd.Series([supp for _, supp in patterns], dtype="int64"),
-            }
-        )
+        corpus, group = pdf["corpus"].iloc[0], int(pdf["group"].iloc[0])
+        rows = zip((tuple(r.tolist()) for r in pdf["ranks"]), pdf["cnt"])
+        patterns = group_patterns(rows, dictionaries[corpus], corpus, group, max_group_rows)
+        return pd.DataFrame({
+            "corpus": pd.Series([corpus] * len(patterns), dtype="object"),
+            "items": pd.Series([items for items, _ in patterns], dtype="object"),
+            "freq": pd.Series([supp for _, supp in patterns], dtype="int64"),
+        })
 
-    # Pin the mining stage's parallelism. Its shuffle is bytes-tiny
-    # (combined conditional transactions), so AQE's bytes-advisory
-    # coalescing would pack the COMPUTE-bound Python mining into a handful
-    # of tasks (measured r17: 3 tasks for a 40-group run). An explicit hash
-    # repartition on the group key is exempt from AQE coalescing and
-    # satisfies the groupBy's clustering; 4× overallocation keeps expected
+    # Pin the mining stage's parallelism: AQE would coalesce its bytes-tiny
+    # shuffle into a few COMPUTE-bound tasks (r17: 3 tasks for 40 groups).
+    # A hash repartition on the group key is exempt from coalescing and
+    # satisfies the groupBy; 4× overallocation keeps the expected
     # hash-collision parallelism loss under ~12% (guide §2.5).
     return (
         cond.repartition(4 * num_groups, "corpus", "group")

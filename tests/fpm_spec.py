@@ -33,12 +33,18 @@ from collections import Counter
 from itertools import combinations
 
 
+def canonical(items) -> list:
+    """``items`` in the engine's canonical order, Spark's ``array_sort``:
+    ascending, a null item last."""
+    return sorted(items, key=lambda i: (i is None, i))
+
+
 def frequent_itemsets(baskets, min_count: int) -> dict[tuple, int]:
-    """{sorted itemset tuple: frequency} over the non-empty subsets of
+    """{canonical itemset tuple: frequency} over the non-empty subsets of
     each basket's distinct items that reach ``min_count``."""
     counts = Counter(
         combo
-        for items in (sorted(set(basket)) for basket in baskets)
+        for items in (canonical(set(basket)) for basket in baskets)
         for k in range(1, len(items) + 1)
         for combo in combinations(items, k)
     )
@@ -84,4 +90,4 @@ def predict_items(rules, basket) -> list | None:
 
 def predict(rules, basket) -> str | None:
     items = predict_items(rules, basket)
-    return None if items is None else ", ".join("null" if i is None else i for i in items)
+    return None if items is None else ", ".join("null" if i is None else str(i) for i in items)

@@ -1,12 +1,13 @@
 """Cross-kernel agreement: the self-contained pandas PFP kernel must mine
 exactly the same itemsets as MLlib's JVM kernel (the reference's upstream),
-with both balanced (EPFP) and hash (PFP) group assignment. Its group miner
-is also checked against the pure-Python spec without Spark."""
+with both balanced (EPFP) and hash (PFP) group assignment. Its stage
+functions are also checked against the pure-Python spec without Spark."""
 
 from __future__ import annotations
 
 import math
 import re
+from collections import Counter
 from contextlib import contextmanager
 
 import pytest
@@ -15,7 +16,7 @@ from hypothesis import strategies as st
 from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
-from fpm_spec import frequent_itemsets
+from fpm_spec import canonical, frequent_itemsets
 from optimal_parallel_fp_growth_spark import FPGrowth
 from optimal_parallel_fp_growth_spark.operators import pfp_kernel
 from optimal_parallel_fp_growth_spark.operators.balanced import (
@@ -125,16 +126,22 @@ def test_grouped_mining_empty_and_unknown_corpus(spark):
 
 def test_null_item_is_mined_as_an_item(spark):
     """A null element inside a basket is an item like any other, even when
-    its frequency ties with a non-null item's in the rank dictionary."""
+    its frequency ties with a non-null item's in the rank dictionary, on
+    string and on integer baskets; beside a null, longs above 2^53 keep
+    their identity (pandas hands over an integer array that holds a null
+    as floats)."""
     from optimal_parallel_fp_growth_spark.operators.pfp_kernel import mine_pandas
 
-    df = spark.createDataFrame([(["x", None],), (["x"],), ([None],)], "items array<string>")
-    got = {tuple(r["items"]): r["freq"] for r in mine_pandas(df, 1).collect()}
-    assert {tuple(sorted(k, key=str)): v for k, v in got.items()} == {
-        ("x",): 2,
-        (None,): 2,
-        (None, "x"): 1,
-    }
+    cases = [
+        ("string", [["x", None], ["x"], [None]]),
+        ("int", [[1, None], [1], [None]]),
+        ("bigint", [[1, None], [1], [None]]),
+        ("bigint", [[2**53 + 1, None], [2**53 + 1], [2**53, 7]]),
+    ]
+    for item_dt, baskets in cases:
+        df = spark.createDataFrame([(b,) for b in baskets], f"items array<{item_dt}>")
+        got = {tuple(canonical(r["items"])): r["freq"] for r in mine_pandas(df, 1).collect()}
+        assert got == frequent_itemsets(baskets, 1), (item_dt, baskets)
 
 
 def test_balanced_assignment_properties():
@@ -167,45 +174,42 @@ def test_balanced_is_more_balanced_than_hash():
     assert spread_balanced <= spread_hash
 
 
-NUM_RANKS = 12
+ITEMS = ["a", "b", "c", "d", "e", "f", "", None]
 
 
-@settings(max_examples=200, deadline=None)
+@settings(max_examples=300, deadline=None)
 @given(
-    db=st.lists(
-        st.tuples(
-            st.sets(st.integers(0, NUM_RANKS - 1), min_size=1).map(lambda t: tuple(sorted(t))),
-            st.integers(1, 3),
-        ),
-        max_size=40,
-    ),
-    min_count=st.integers(1, 6),
-    group_of=st.lists(st.integers(0, 3), min_size=NUM_RANKS, max_size=NUM_RANKS),
+    baskets=st.lists(st.lists(st.sampled_from(ITEMS), max_size=6), max_size=30),
+    min_count=st.integers(1, 4),
+    as_long=st.booleans(),
 )
-def test_projection_mining_matches_spec(db, min_count, group_of):
-    """Without Spark: ``_mine`` over a conditional DB equals the spec's
-    brute force, and mining each group's PFP conditional DB (the prefix
-    up to the group's last rank of every transaction) for the ranks it
-    owns finds every itemset exactly once."""
-    want = frequent_itemsets([t for t, cnt in db for _ in range(cnt)], min_count)
-
-    def mined(db, owns):
-        out = []
-        pfp_kernel._mine(db, (), min_count, owns, out)
-        return [(tuple(sorted(p)), n) for p, n in out]
-
-    got = mined(db, None)
-    assert len(got) == len(dict(got)) and dict(got) == want
-
-    union = []
-    for g in set(group_of):
-        cond = []
-        for ranks, cnt in db:
-            owned = [i for i, r in enumerate(ranks) if group_of[r] == g]
-            if owned:
-                cond.append((ranks[: owned[-1] + 1], cnt))
-        union += mined(cond, lambda r, g=g: group_of[r] == g)
-    assert len(union) == len(dict(union)) and dict(union) == want
+def test_projection_mining_matches_spec(baskets, min_count, as_long):
+    """Without Spark: the three stage functions, composed for one corpus
+    under balanced and hash assignment and 1, 2, 7 or more groups than
+    items, equal the spec's brute force, and each itemset comes out of
+    exactly one group. Stage 2 sees each item's string form, as Spark's
+    cast hands it over; ``as_long`` maps the items to longs around 2^53."""
+    if as_long:
+        baskets = [[None if i is None else 2**53 + ITEMS.index(i) for i in b] for b in baskets]
+    want = frequent_itemsets(baskets, min_count)
+    freq = Counter(i for b in baskets for i in set(b))
+    rows = [(i, None if i is None else str(i), f) for i, f in freq.items() if f >= min_count]
+    keys = [[None if i is None else str(i) for i in b] for b in baskets]
+    for balanced in (True, False):
+        for num_groups in (1, 2, 7, len(rows) + 1):
+            d = pfp_kernel.build_dictionary(rows, min_count, num_groups, balanced)
+            cond: dict[int, list] = {}
+            for b in keys:
+                for g, ranks in pfp_kernel.cond_transactions(b, d):
+                    cond.setdefault(g, []).append((ranks, 1))
+            got = [
+                (tuple(canonical(items)), f)
+                for g, db in cond.items()
+                for items, f in pfp_kernel.group_patterns(
+                    db, d, 0, g, pfp_kernel._MAX_GROUP_ROWS
+                )
+            ]
+            assert len(got) == len(dict(got)) and dict(got) == want, (balanced, num_groups)
 
 
 ADVICE = ("num_partitions", "min_support", "kernel='mllib'")

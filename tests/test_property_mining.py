@@ -12,7 +12,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from fpm_spec import frequent_itemsets, predict
+from fpm_spec import canonical, frequent_itemsets, predict
 
 pytestmark = pytest.mark.fpm
 
@@ -24,6 +24,17 @@ baskets_strategy = st.lists(
     max_size=12,
 )
 
+# The odd items too: null, and "" (what the text source makes of empty
+# lines and repeated spaces). As longs, the letters straddle 2^53.
+ODD_ALPHABET = [*ALPHABET, "", None]
+AS_LONG = {item: 2**53 + i for i, item in enumerate(ODD_ALPHABET[:-1])} | {None: None}
+
+odd_baskets_strategy = st.lists(
+    st.sets(st.sampled_from(ODD_ALPHABET), min_size=1).map(canonical),
+    min_size=1,
+    max_size=12,
+)
+
 
 @settings(
     max_examples=12,
@@ -31,29 +42,33 @@ baskets_strategy = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(
-    baskets=baskets_strategy,
+    baskets=odd_baskets_strategy,
+    item_dt=st.sampled_from(["string", "bigint"]),
     min_support=st.sampled_from([0.2, 0.4, 0.6]),
     balanced=st.booleans(),
     num_partitions=st.sampled_from([1, 2, 7, 64]),
     layout=st.tuples(st.sampled_from([None, 1, 3]), st.sampled_from([None, 2])),
 )
 def test_both_kernels_match_brute_force(
-    spark, baskets, min_support, balanced, num_partitions, layout
+    spark, baskets, item_dt, min_support, balanced, num_partitions, layout
 ):
-    """``layout`` is the input's partition count (None: a local relation
-    from the plain list) and, when not None, a 2-row Arrow batch:
-    identical conditional transactions then reach a mining group from
-    different batches and map tasks."""
+    """``item_dt`` is the baskets' item type: ``string``, or ``bigint``
+    with the letters mapped to longs. ``layout`` is the input's partition
+    count (None: a local relation from the plain list) and, when not
+    None, a 2-row Arrow batch: identical conditional transactions then
+    reach a mining group from different batches and map tasks."""
     from optimal_parallel_fp_growth_spark.operators.fpgrowth import FPGrowth
 
+    if item_dt == "bigint":
+        baskets = [[AS_LONG[i] for i in b] for b in baskets]
     input_partitions, batch_rows = layout
     rows = [(b,) for b in baskets]
     if input_partitions is not None:
         rows = spark.sparkContext.parallelize(rows, input_partitions)
-    tx = spark.createDataFrame(rows, "items array<string>")
+    tx = spark.createDataFrame(rows, f"items array<{item_dt}>")
     want = frequent_itemsets(baskets, math.ceil(min_support * len(baskets)))
     probes = spark.createDataFrame(
-        list(enumerate([*baskets, None])), "id long, items array<string>"
+        list(enumerate([*baskets, None])), f"id long, items array<{item_dt}>"
     )
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     previous = spark.conf.get(key, None)
@@ -73,7 +88,7 @@ def test_both_kernels_match_brute_force(
             }
             where = (
                 f"kernel={kernel} balanced={balanced} num_partitions={num_partitions} "
-                f"layout={layout} baskets={baskets} s={min_support}"
+                f"layout={layout} {item_dt} baskets={baskets} s={min_support}"
             )
             assert got == want, where
             rules = model.association_rules().collect()
