@@ -231,10 +231,6 @@ def main(argv: list[str] | None = None) -> int:
         # reference's timing harness prints fit wall-time (EPFP.scala:31-35)
         print(f"Elapsed time: {int((time.perf_counter() - t0) * 1000)} ms")
 
-        from optimal_parallel_fp_growth_spark.functions.caching import (
-            release_cached_inputs,
-        )
-
         if args.cmd == "mine":
             _print_rules(model.association_rules(args.min_confidence))
         elif args.cmd == "recommend":
@@ -245,7 +241,6 @@ def main(argv: list[str] | None = None) -> int:
             )
             for r in out.collect():
                 print(f"{' '.join(r.items)} -> {r.prediction}")
-            release_cached_inputs(out)
         else:
             test = read_baskets_text(spark, args.test)
             out = model.transform(
@@ -253,7 +248,6 @@ def main(argv: list[str] | None = None) -> int:
             )
             for r in out.collect():
                 print(f"{' '.join(r.items)} -> {r.prediction}")
-            release_cached_inputs(out)
         model.unpersist()
         return 0
     finally:

@@ -11,9 +11,8 @@ documented quirks (SURVEY §3.4):
   (Apriori.scala:125) — confidence divided by the consequent's absolute
   count, an unnormalized lift-like metric.
 
-Plan shape: each basket is deduplicated and sorted once
-(``array_sort(array_distinct(items))``, as ``FPGrowth.fit`` counts a
-repeated item once); in-basket pair generation pairs its items in
+Plan shape: each of the input's baskets (operators/itemcount.py) is
+sorted once; in-basket pair generation pairs its items in
 position order with array higher-order functions (``transform``/
 ``slice``/``flatten`` — pure codegen, no row ids, no self-join) →
 explode → partial+final hash agg ≥ floor(s·N) → two null-safe broadcast
@@ -30,20 +29,17 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from optimal_parallel_fp_growth_spark.operators.itemcount import baskets
+
 
 def apriori_one_to_one_rules(
     transactions: DataFrame,
-    items_col: str = "items",
     min_support: float = 0.1,
     min_confidence: float = 0.2,
 ) -> DataFrame:
     """→ (antecedent: string, consequent: string, confidence, score)
     where score is the reference's confidence/rawCount quirk metric."""
-    tx = transactions.select(
-        F.array_sort(F.array_distinct(items_col)).alias("items")
-    ).where(F.col("items").isNotNull())
-    # N counts real baskets only, as FPGrowth.fit does: null rows must not
-    # inflate floor(s·N)
+    tx = baskets(transactions).select(F.array_sort("items").alias("items"))
     min_count = int(math.floor(min_support * tx.count()))
 
     singles = (

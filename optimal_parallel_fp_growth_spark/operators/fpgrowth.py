@@ -32,6 +32,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from optimal_parallel_fp_growth_spark.operators.itemcount import baskets
 from optimal_parallel_fp_growth_spark.operators.rules import association_rules, local_frame
 from optimal_parallel_fp_growth_spark.operators.transform import (
     release_rule_index,
@@ -160,23 +161,18 @@ class FPGrowth:
 
     def fit(self, dataset: DataFrame) -> FPGrowthModel:
         """Mine frequent itemsets (epfp/FPGrowth.scala:55-80 lifecycle):
-        project the items column, drop null baskets, count N, mine, and
-        collect the canonical itemsets once into a local relation.
-
-        A basket is a set: repeated items count once, on both kernels
-        (MLlib alone would raise), unless ``validate_unique`` asks for
-        the reference's error."""
-        items = (
-            dataset.select(F.col(self.items_col).alias("items"))
-            .where(F.col("items").isNotNull())
-        )
+        take the items column's baskets (operators/itemcount.py), count N,
+        mine, and collect the canonical itemsets once into a local
+        relation. With ``validate_unique`` a repeated item raises, as in
+        the reference, instead of counting once."""
+        items = dataset.select(F.col(self.items_col).alias("items"))
         if self.validate_unique:
             from optimal_parallel_fp_growth_spark.functions.arrays import (
                 validate_unique_items,
             )
 
             validate_unique_items(items, "items")
-        items = items.select(F.array_distinct("items").alias("items"))
+        items = baskets(items)
         items.persist()
         try:
             n = items.count()
@@ -205,11 +201,7 @@ class FPGrowth:
     def _fit_mllib(self, items: DataFrame) -> DataFrame:
         from pyspark.ml.fpm import FPGrowth as MLlibFPGrowth
 
-        est = MLlibFPGrowth(
-            itemsCol="items",
-            minSupport=self.min_support,
-            minConfidence=self.min_confidence,
-        )
+        est = MLlibFPGrowth(itemsCol="items", minSupport=self.min_support)
         if self.num_partitions is not None:
             est.setNumPartitions(self.num_partitions)
         return est.fit(items).freqItemsets

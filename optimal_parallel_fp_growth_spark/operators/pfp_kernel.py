@@ -10,8 +10,9 @@ As in the reference, the stages are plain functions that Spark only
 wires together (:func:`_mine_by_corpus`): :func:`build_dictionary` over
 stage 1's collected frequent items (FPGrowthCore.scala:86),
 :func:`cond_transactions` per basket in ``mapInPandas`` (``gen_cond``),
-and :func:`group_patterns` per (corpus, group) in ``applyInPandas``
-(``mine_group``) after the one shuffle.
+and :func:`group_patterns` per (corpus, group), streamed by
+``applyInPandas`` (``mine_group``) after the one shuffle. Both entry
+points mine the ``itemcount.baskets`` of their input.
 
 Scale note: one group's conditional DB and its projections live in one
 Python worker's heap; group count should scale with data
@@ -32,6 +33,7 @@ from optimal_parallel_fp_growth_spark.operators.balanced import (
     balanced_group_assignment,
     hash_group_assignment,
 )
+from optimal_parallel_fp_growth_spark.operators.itemcount import baskets
 
 # One group's conditional DB must fit a Python worker's heap; a group with
 # more distinct conditional transactions fails loudly with actionable
@@ -93,19 +95,19 @@ def group_patterns(
 ) -> list[tuple[list, int]]:
     """Stage 3, one group's ``(ranks, cnt)`` rows → ``[(items, freq)]``:
     merges equal ranks (rows from different map tasks, or one task's
-    flushes), fails with advice past ``max_rows`` distinct ones, and
-    mines the patterns whose last rank the group owns (duplicate
-    suppression O5, FPTree.scala:85-97), decoded to items."""
+    flushes), fails with advice at the first row past ``max_rows``
+    distinct ones, and mines the patterns whose last rank the group owns
+    (duplicate suppression O5, FPTree.scala:85-97), decoded to items."""
     merged: dict[tuple[int, ...], int] = {}
     for ranks, cnt in rows:
         merged[ranks] = merged.get(ranks, 0) + cnt
-    if len(merged) > max_rows:
-        raise RuntimeError(
-            f"mining group {group} of corpus {corpus} has {len(merged)} "
-            f"distinct conditional transactions (> {max_rows}); "
-            "raise num_partitions (more, smaller groups), raise "
-            "min_support, or use kernel='mllib' for this scale"
-        )
+        if len(merged) > max_rows:
+            raise RuntimeError(
+                f"mining group {group} of corpus {corpus} has {len(merged)} "
+                f"distinct conditional transactions (> {max_rows}); "
+                "raise num_partitions (more, smaller groups), raise "
+                "min_support, or use kernel='mllib' for this scale"
+            )
     group_of, decode = dictionary.group_of, dictionary.decode
     patterns: list[tuple[tuple[int, ...], int]] = []
     _mine(list(merged.items()), (), dictionary.min_count,
@@ -158,9 +160,9 @@ def mine_pandas(
     num_partitions: int | None = None,
     balanced: bool = True,
 ) -> DataFrame:
-    """items_df: ``items`` array column (string/int/long elements); null
-    baskets are dropped. → (items: array<input element type>, freq: long),
-    uncanonicalized order. One corpus under a constant key."""
+    """items_df: ``items`` array column (string/int/long elements).
+    → (items: array<input element type>, freq: long), uncanonicalized
+    order. One corpus under a constant key."""
     return _mine_by_corpus(
         _keyed(items_df, F.lit(0)), {0: min_count}, num_partitions, balanced
     ).drop("corpus")
@@ -176,9 +178,8 @@ def mine_pandas_by(
     """Grouped mining: run the PFP pipeline INDEPENDENTLY per corpus (e.g.
     per language) in one pass — the "hypertable rollup" shape for mining.
     items_df: (corpus_col, items array); → (corpus_col, items, freq) where
-    freq ≥ ceil(min_support · |corpus|) within each corpus. Rows with a
-    null basket or a null corpus key are dropped before corpus sizes are
-    counted, as ``FPGrowth.fit`` excludes null baskets from N."""
+    freq ≥ ceil(min_support · |corpus|) within each corpus; a row with a
+    null corpus key is no basket."""
     from optimal_parallel_fp_growth_spark.operators.fpgrowth import min_count_for
 
     if not 0.0 < min_support <= 1.0:
@@ -193,10 +194,8 @@ def mine_pandas_by(
 
 
 def _keyed(items_df: DataFrame, corpus: Column) -> DataFrame:
-    """(corpus, items) rows without null baskets or null corpus keys."""
-    return items_df.select(corpus.alias("corpus"), "items").where(
-        F.col("corpus").isNotNull() & F.col("items").isNotNull()
-    )
+    """(corpus, items): the baskets of ``items_df`` keyed by ``corpus``."""
+    return baskets(items_df, corpus.alias("corpus"))
 
 
 def _mine_by_corpus(
@@ -267,12 +266,14 @@ def _mine_by_corpus(
         gen_cond, f"corpus {corpus_dt}, group int, ranks array<int>, cnt long"
     )
 
-    # stage 3 — one (corpus, group) per call
-    def mine_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        corpus, group = pdf["corpus"].iloc[0], int(pdf["group"].iloc[0])
-        rows = zip((tuple(r.tolist()) for r in pdf["ranks"]), pdf["cnt"])
+    # stage 3 — one (corpus, group) per call, streamed in Arrow batches so
+    # that the group bound holds before the group is in memory
+    def mine_group(key: tuple, batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        corpus, group = key[0], int(key[1])
+        rows = ((tuple(r.tolist()), cnt)
+                for pdf in batches for r, cnt in zip(pdf["ranks"], pdf["cnt"]))
         patterns = group_patterns(rows, dictionaries[corpus], corpus, group, max_group_rows)
-        return pd.DataFrame({
+        yield pd.DataFrame({
             "corpus": pd.Series([corpus] * len(patterns), dtype="object"),
             "items": pd.Series([items for items, _ in patterns], dtype="object"),
             "freq": pd.Series([supp for _, supp in patterns], dtype="int64"),

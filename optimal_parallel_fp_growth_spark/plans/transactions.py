@@ -56,8 +56,8 @@ def transactions_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def transactions_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """basket = the distinct space-separated tokens of one document —
-    the reference's own loader shape (``epfp/EPFP.scala:26``)."""
+    """basket = the distinct space-separated tokens of one document, split
+    as the oracle's DuckDB ``string_split`` (not as Java's, sources/text.py)."""
     docs = fan_out_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )

@@ -38,12 +38,10 @@ EVENTS_MIN_CONFIDENCE = 0.2
 LINEITEM_MIN_SUPPORT = 0.002
 
 
-def _events_model(spark: SparkSession, sf_dir: str, kernel: str = "mllib"):
+def _events_model(spark: SparkSession, sf_dir: str):
     tx = transactions_from_events(spark, sf_dir)
     return tx, FPGrowth(
-        min_support=EVENTS_MIN_SUPPORT,
-        min_confidence=EVENTS_MIN_CONFIDENCE,
-        kernel=kernel,
+        min_support=EVENTS_MIN_SUPPORT, min_confidence=EVENTS_MIN_CONFIDENCE
     ).fit(tx)
 
 

@@ -59,16 +59,19 @@ def test_transform_preserves_duplicate_rows(spark, fpm_train):
 
 
 def test_freq_items_ignores_null_baskets(spark):
-    """N counts only non-null baskets, as in FPGrowth.fit."""
+    """N counts only non-null baskets, and a repeated item counts once,
+    as in FPGrowth.fit."""
     from optimal_parallel_fp_growth_spark.operators.itemcount import freq_items
 
-    tx = spark.createDataFrame(
-        [(["a", "b"],), (["a", "b"],), (["a", "c"],), (None,), (None,), (None,)],
-        "items array<string>",
-    )
-    got = {r.item: r.freq for r in freq_items(tx, min_support=0.5).collect()}
-    fis = FPGrowth(min_support=0.5).fit(tx).freq_itemsets.where(F.size("items") == 1)
-    assert got == {"a": 3, "b": 2} == {r["items"][0]: r.freq for r in fis.collect()}
+    cases = [
+        ([["a", "b"], ["a", "b"], ["a", "c"], None, None, None], {"a": 3, "b": 2}),
+        ([["a", "a", "c"], ["a", "b"], ["b", "c"], ["c"], None], {"a": 2, "b": 2, "c": 3}),
+    ]
+    for baskets, want in cases:
+        tx = spark.createDataFrame([(b,) for b in baskets], "items array<string>")
+        got = {r.item: r.freq for r in freq_items(tx, min_support=0.5).collect()}
+        fis = FPGrowth(min_support=0.5).fit(tx).freq_itemsets.where(F.size("items") == 1)
+        assert got == want == {r["items"][0]: r.freq for r in fis.collect()}, baskets
 
 
 @pytest.mark.parametrize("kernel", ["mllib", "pandas"])

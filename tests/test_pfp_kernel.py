@@ -215,6 +215,24 @@ def test_projection_mining_matches_spec(baskets, min_count, as_long):
 ADVICE = ("num_partitions", "min_support", "kernel='mllib'")
 
 
+def test_group_bound_stops_the_merge():
+    """Without Spark: the guard raises at the first row past the bound,
+    so a group far over it is not read, let alone held, in full."""
+    d = pfp_kernel.build_dictionary([("a", "a", 9), ("b", "b", 9)], 1, 1, True)
+    distinct = [(0,), (1,), (0, 1)]
+    consumed = 0
+
+    def rows():
+        nonlocal consumed
+        for i in range(1000):
+            consumed += 1
+            yield distinct[i % 3], 1
+
+    with pytest.raises(RuntimeError, match="has 3 distinct conditional transactions"):
+        pfp_kernel.group_patterns(rows(), d, 0, 0, 2)
+    assert consumed == 3
+
+
 def test_heavy_group_fails_with_advice(spark, fpm_train, monkeypatch):
     monkeypatch.setattr(pfp_kernel, "_MAX_GROUP_ROWS", 1)
     est = FPGrowth(min_support=0.4, kernel="pandas", num_partitions=1)

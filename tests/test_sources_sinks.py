@@ -21,11 +21,12 @@ from optimal_parallel_fp_growth_spark.sources.text import read_baskets_text
 @pytest.mark.fpm
 def test_text_basket_source(spark, tmp_path):
     p = tmp_path / "baskets.txt"
-    p.write_text("I1 I2 I5 I2\nI2 I4\n\n")
+    p.write_text("I1 I2 I5 I2\nI2 I4\n\nI1 I3 \n   \n")
     got = read_baskets_text(spark, str(p)).collect()
     baskets = sorted(tuple(r.items) for r in got)
-    # dedup within line, order of first appearance; empty line -> ['']
-    assert baskets == [("",), ("I1", "I2", "I5"), ("I2", "I4")]
+    # dedup within line, order of first appearance; as Java's split(" "):
+    # empty line -> [''], trailing spaces dropped, a line of spaces -> []
+    assert baskets == [(), ("",), ("I1", "I2", "I5"), ("I1", "I3"), ("I2", "I4")]
 
 
 def test_parquet_roundtrip_and_partition_pruning(spark, sf_small, tmp_path):
